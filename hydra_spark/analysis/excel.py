@@ -20,13 +20,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from hydra_spark.analysis.ingest import ROWS_SCHEMA, _analyse_one
-from hydra_spark.analysis.xls import XLS_MAGIC, XLS_MIME, xls_bytes, xls_rows, xls_sheet_names  # noqa: F401
+from hydra_spark.analysis.xls import XLS_MAGIC, XLS_MIME, xls_bytes, xls_rows  # noqa: F401
 from hydra_spark.analysis.xlsx import (  # noqa: F401
     XLSX_MAGIC,
     XLSX_MIME,
     xlsx_bytes,
     xlsx_rows,
-    xlsx_sheet_names,
 )
 
 try:  # pragma: no cover - not installed in this sandbox
@@ -67,12 +66,6 @@ def excel_rows(data: bytes, sheet_name: str | None = None) -> list[list[str]]:
     if data[:8] == XLS_MAGIC:
         return _rows_from_xls(data, sheet_name)
     return _rows_from_xlsx(data, sheet_name)
-
-
-def excel_sheet_names(data: bytes) -> list[str]:
-    if data[:8] == XLS_MAGIC:
-        return xls_sheet_names(data)
-    return xlsx_sheet_names(data)
 
 
 def analyse_excel_batch(df: DataFrame) -> DataFrame:

@@ -76,7 +76,10 @@ def extract_text_jvm(html_col: Column) -> Column:
     the python twin — the round-level invariant test compares them over
     the full corpus. Callers route gzip/xlsx payloads to the python
     path; everything else never leaves the JVM."""
-    s = html_col.cast("string")  # lenient: invalid bytes → U+FFFD, like decode(..,'replace')
+    # the cast keeps raw bytes (no U+FFFD substitution like python's
+    # decode(..,'replace')), so callers must pass valid UTF-8 or PAR1
+    # payloads only — route_python_boundary gates the JVM lane on that
+    s = html_col.cast("string")
     has_p = s.rlike("<p>(.*)</p>")  # non-dotall, same as python re default
     # (?U) makes Java's \s Unicode-aware like Python's (NBSP etc.) —
     # without it the two twins diverge on non-ASCII whitespace; the
@@ -93,12 +96,6 @@ def extract_text_jvm(html_col: Column) -> Column:
         )
         .otherwise(s)
     )
-
-
-def extracted_text_sha1(html_col: Column) -> Column:
-    """sha1 of the extracted text — the cheap form of the invariant for
-    the checks log (full text goes to the texts output table)."""
-    return F.sha1(F.encode(extract_text(html_col), "UTF-8"))
 
 
 # ---------------------------------------------------------------------------

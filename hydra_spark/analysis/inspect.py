@@ -108,11 +108,6 @@ def detect_dialect(text: str) -> tuple[str, int]:
     return ",", 0
 
 
-def detect_separator(text: str) -> str:
-    """Back-compat wrapper over detect_dialect."""
-    return detect_dialect(text)[0]
-
-
 def _validate_inspection_full(
     data: bytes, prev: dict
 ) -> "tuple[dict, list[list[str]], list[list]] | None":

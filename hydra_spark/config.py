@@ -15,8 +15,6 @@ from dataclasses import dataclass, field, replace
 class HydraConfig:
     # crawl loop (config_default.toml:43-51)
     batch_size: int = 40
-    sleep_between_batches: float = 60.0
-    max_pool_size: int = 50
 
     # politeness / backoff (config_default.toml:38-41)
     backoff_nb_req: int = 180
@@ -59,14 +57,11 @@ class HydraConfig:
     # fold frontier merge-on-read deltas into the base every K rounds
     compact_every_rounds: int = 10
     heavy_host_salt: int = 8              # extra salt shards for hot hosts
-    heavy_host_threshold: int = 10_000    # rows per host before salting
     bloom_fpp: float = 0.01
     bloom_shards: int = 64
-    # stage toggles (bench attribution + deployments without the udata
-    # webhook): outbox payload writes and the validate-then-detect
-    # inspection-reuse join can be switched off independently
+    # deployments without the udata webhook switch off the outbox
+    # payload writes
     webhook_outbox: bool = True
-    validate_then_detect: bool = True
     # in-round format dispatch beyond CSV/Excel (config_default.toml
     # GEOJSON_TO_PMTILES / PARQUET_TO_DB; data_formats/geojson/
     # __init__.py:24-49, data_formats/parquet/__init__.py:35-62)

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hydra_spark.config import HydraConfig
+from hydra_spark.crawl.select_batch import hash_build_side
 from hydra_spark.functions.urls import url_domain
 
 RFC1123 = "EEE, dd MMM yyyy HH:mm:ss 'GMT'"
@@ -79,7 +80,7 @@ def simulate_fetch(
     # re-SORT the payload-carrying pages side (~GBs of html) every
     # round. The batch carries ~150 B/row, so per-partition builds are
     # a few MB; pages stream unsorted.
-    b = batch if cfg.batch_size <= cfg.bucket_claim_threshold else batch.hint("SHUFFLE_HASH")
+    b = hash_build_side(batch, cfg)
     df = b.join(p, b.url == p._purl, "left").drop("_purl")
 
     now_ts = F.to_timestamp(F.lit(now))

@@ -25,7 +25,7 @@ from hydra_spark.crawl.change import detect_changes, has_check_changed_expr
 from hydra_spark.crawl.fetch import simulate_fetch
 from hydra_spark.crawl.next_check import next_check_expr
 from hydra_spark.crawl.robots import split_robots
-from hydra_spark.crawl.select_batch import select_batch
+from hydra_spark.crawl.select_batch import hash_build_side, select_batch
 from hydra_spark.crawl.webhook import webhook_payloads
 from hydra_spark.exceptions import with_exception_flag
 from hydra_spark.schemas import CHECKS_SCHEMA
@@ -78,6 +78,18 @@ def _robots_checks(blocked: DataFrame, round_id: int, now: str, cfg: HydraConfig
             "next_check_at",
             now_ts + F.make_interval(hours=F.lit(cfg.check_delays_hours[-1])),
         )
+    )
+
+
+def _as_checks(df: DataFrame) -> DataFrame:
+    """Project onto CHECKS_SCHEMA: cast the columns ``df`` has, NULL-fill
+    the analysis-only ones it lacks."""
+    have = set(df.columns)
+    return df.select(
+        *[
+            (F.col(f.name) if f.name in have else F.lit(None)).cast(f.dataType).alias(f.name)
+            for f in CHECKS_SCHEMA.fields
+        ]
     )
 
 
@@ -162,10 +174,8 @@ def run_round(
             F.col("resource_id").alias("_prid"),
             *[F.col(c).alias(f"prev_{c}") for c in _PREV_COLS],
         )
-        # SHUFFLE_HASH build on the ~150 B/row claim side; small rounds
-        # stay un-hinted so Catalyst can broadcast the tiny prev side
-        if cfg.batch_size > cfg.bucket_claim_threshold:
-            go = go.hint("SHUFFLE_HASH")
+        # hash build on the ~150 B/row claim side at scale
+        go = hash_build_side(go, cfg)
         go = go.join(prev, go.resource_id == prev._prid, "left").drop("_prid")
 
     fetched = simulate_fetch(go, pages, cfg, round_id, now)
@@ -173,9 +183,7 @@ def run_round(
     cur = fetched
     if lc is None:
         for c in _PREV_COLS:
-            cur = cur.withColumn(f"prev_{c}", F.lit(None).cast(dict(
-                zip(CHECKS_SCHEMA.fieldNames(), [f.dataType for f in CHECKS_SCHEMA.fields])
-            )[c]))
+            cur = cur.withColumn(f"prev_{c}", F.lit(None).cast(CHECKS_SCHEMA[c].dataType))
     cur = cur.withColumn("prev_exists", F.col("prev_id").isNotNull())
 
     cur = detect_changes(cur, now)
@@ -271,7 +279,7 @@ def run_round(
             F.col("html").isNotNull() & F.col("status").isNotNull() & (F.col("status") < 400)
         ).select("url", "resource_id", "dataset_id", "html", "parsing_table", "mime_type")
     )
-    if cfg.validate_then_detect and store.tables_index.exists():
+    if store.tables_index.exists():
         # validate-then-detect fast path: hand each file its latest
         # previous inspection (csv_like/__init__.py:41-50)
         wt = Window.partitionBy("parsing_table").orderBy(F.desc("created_at"))
@@ -281,11 +289,10 @@ def run_round(
             .where("_rn = 1")
             .select(F.col("parsing_table").alias("_pt"), F.col("csv_detective").alias("prev_inspection"))
         )
-        # SHUFFLE_HASH: build on the inspection side, stream the
-        # html-carrying fetch rows unsorted (same rationale as the
-        # prev-checks join above); un-hinted for small rounds
-        if cfg.batch_size > cfg.bucket_claim_threshold:
-            prev_ti = prev_ti.hint("SHUFFLE_HASH")
+        # hash build on the inspection side at scale: the html-carrying
+        # fetch rows stream unsorted (same rationale as the prev-checks
+        # join above)
+        prev_ti = hash_build_side(prev_ti, cfg)
         to_process = to_process.join(
             prev_ti, to_process.parsing_table == prev_ti._pt, "left"
         ).drop("_pt")
@@ -369,49 +376,25 @@ def run_round(
             _mark("geojson_pmtiles")
 
     # ---- checks append (fill analysis-only fields with NULLs) ----------
-    have = set(cur.columns)
-    check_cols = [
-        (
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            if f.name in have
-            else F.lit(None).cast(f.dataType).alias(f.name)
-        )
-        for f in CHECKS_SCHEMA.fields
-    ]
-    checks_batch = cur.select(*check_cols)
-    if robots_blocked is not None:
-        rb = _robots_checks(robots_blocked, round_id, now, cfg)
-        rb_have = set(rb.columns)
-        checks_batch = checks_batch.unionByName(
-            rb.select(
-                *[
-                    (
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        if f.name in rb_have
-                        else F.lit(None).cast(f.dataType).alias(f.name)
-                    )
-                    for f in CHECKS_SCHEMA.fields
-                ]
-            )
-        )
+    rb = None if robots_blocked is None else _robots_checks(robots_blocked, round_id, now, cfg)
+    checks_batch = _as_checks(cur)
+    if rb is not None:
+        checks_batch = checks_batch.unionByName(_as_checks(rb))
 
     # ---- frontier MERGE (SO2) as a merge-on-read DELTA: a round touches
     # ~batch_size of the 10^10-row frontier, so appending a delta beats
     # rewriting the snapshot (flat, non-scaling cost); readers apply the
     # latest delta per key; compaction folds them back periodically.
-    updates = cur.select(
-        F.col("resource_id").alias("_urid"),
-        F.col("id").alias("_new_last_check"),
-        F.lit("checked").alias("_upd"),
-    )
-    if robots_blocked is not None:
-        updates = updates.unionByName(
-            _robots_checks(robots_blocked, round_id, now, cfg).select(
-                F.col("resource_id").alias("_urid"),
-                F.col("id").alias("_new_last_check"),
-                F.lit("checked").alias("_upd"),
-            )
+    def _checked(df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col("resource_id").alias("_urid"),
+            F.col("id").alias("_new_last_check"),
+            F.lit("checked").alias("_upd"),
         )
+
+    updates = _checked(cur)
+    if rb is not None:
+        updates = updates.unionByName(_checked(rb))
     if held is not None:
         updates = updates.unionByName(
             held.select(

@@ -41,6 +41,14 @@ def eligible_frontier(frontier: DataFrame, cfg: HydraConfig) -> DataFrame:
     )
 
 
+def hash_build_side(side: DataFrame, cfg: HydraConfig) -> DataFrame:
+    """Hint ``side`` as a SHUFFLE_HASH build side on rounds that take the
+    bucket-claim path (the same ``batch_size > bucket_claim_threshold``
+    test `select_batch` switches on). Small rounds stay un-hinted so
+    Catalyst can broadcast the small side instead (guide §3.1)."""
+    return side.hint("SHUFFLE_HASH") if cfg.batch_size > cfg.bucket_claim_threshold else side
+
+
 def select_batch(
     frontier: DataFrame,
     latest_checks: DataFrame | None,
@@ -59,12 +67,10 @@ def select_batch(
         lc = latest_checks.select(
             F.col("resource_id").alias("_rid"), F.col("next_check_at")
         )
-        # SHUFFLE_HASH (guide §3.1): two narrow key-only sides — hash
-        # join skips the sort-merge join's sort of BOTH ~frontier-sized
-        # inputs; the build side is (resource_id, next_check_at) only.
-        # Small rounds stay un-hinted (Catalyst broadcasts the view).
-        if cfg.batch_size > cfg.bucket_claim_threshold:
-            lc = lc.hint("SHUFFLE_HASH")
+        # two narrow key-only sides — hash join skips the sort-merge
+        # join's sort of BOTH ~frontier-sized inputs; the build side is
+        # (resource_id, next_check_at) only
+        lc = hash_build_side(lc, cfg)
         el = el.join(lc, el.resource_id == lc._rid, "left").drop("_rid")
     else:
         el = el.withColumn("next_check_at", F.lit(None).cast("timestamp"))

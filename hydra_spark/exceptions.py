@@ -8,14 +8,8 @@ desired table indexes. Always a broadcast join.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from hydra_spark.schemas import RESOURCES_EXCEPTIONS_SCHEMA
-
-
-def empty_exceptions(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], RESOURCES_EXCEPTIONS_SCHEMA)
 
 
 def with_exception_flag(df: DataFrame, exceptions: DataFrame | None) -> DataFrame:

@@ -89,6 +89,32 @@ def test_fetch_join_reuses_pages_partitioning(spark):
     pages.unpersist()
 
 
+@pytest.mark.parametrize(
+    "cfg, join",
+    [
+        (DEFAULT.with_(batch_size=40), "BroadcastHashJoin"),
+        (DEFAULT.with_(batch_size=50_000, bucket_claim_threshold=100), "ShuffledHashJoin"),
+    ],
+    ids=["below_claim_threshold", "above_claim_threshold"],
+)
+def test_join_strategy_follows_claim_threshold(spark, cfg, join):
+    """Small rounds broadcast the small side; bucket-claim rounds hash-
+    build on the narrow side: the claim's latest-check join and the
+    fetch join each plan exactly one join of the expected kind."""
+    from hydra_spark.crawl.fetch import simulate_fetch
+
+    now = "2025-01-15 00:00:00"
+    pages = generate_pages(spark, 2000, n_hosts=10)
+    frontier = generate_frontier(spark, pages)
+    lc = frontier.select(
+        "resource_id", F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("next_check_at")
+    )
+    claim = _plan(select_batch(frontier, lc, cfg, 1, now))
+    fetch = _plan(simulate_fetch(select_batch(frontier, None, cfg, 1, now), pages, cfg, 1, now))
+    for plan in (claim, fetch):
+        assert join in plan and plan.count("Join") == 1, plan
+
+
 def test_whole_stage_codegen_covers_fetch_exprs(spark):
     from hydra_spark.crawl.fetch import simulate_fetch
 
