@@ -306,9 +306,9 @@ def route_python_boundary(df: DataFrame) -> DataFrame:
     and an invalid-UTF-8 string crashes the Arrow→pandas conversion
     feeding the python pass. So the JVM lane takes (a) parquet payloads
     (both twins emit "" for PAR1) and (b) text-typed mimes whose bytes
-    validate; everything else — CSV-to-parse rows, gzip/xlsx/xls
-    decodes, media containers, latin-1 CSV, binary soup sniffed
-    text/plain — ships its bytes to python unchanged.
+    validate and carry no zip magic; everything else — CSV-to-parse
+    rows, gzip/xlsx/xls decodes, media containers, latin-1 CSV, binary
+    soup sniffed text/plain — ships its bytes to python unchanged.
     """
     from hydra_spark.analysis.extract import extract_text_jvm
     from hydra_spark.analysis.georoute import GEOJSON_MIMES, PARQUET_MIMES
@@ -320,10 +320,15 @@ def route_python_boundary(df: DataFrame) -> DataFrame:
     # crawl's sniffed mimes imply the magic, but this function is a
     # public surface). Non-magic parquet-mime rows go to python, whose
     # decode(...,'replace') handles them like round 5 did.
+    # The text lane likewise refuses the zip magic: the python twin
+    # unpacks PK payloads as xlsx whatever their mime, and "PK\x03\x04"
+    # is valid UTF-8 (the gzip and OLE2 magics are not, so
+    # is_valid_utf8 already routes them to python).
     s = F.col("html").cast("string")
     pre_ok = (F.col("mime_type").isin(*PARQUET_MIMES) & s.startswith("PAR1")) | (
         F.col("mime_type").isin("text/html", "text/plain", "text/csv", *GEOJSON_MIMES)
         & F.is_valid_utf8(s)
+        & ~s.startswith("PK\x03\x04")
     )
     needs_python = F.col("parsing_table").isNotNull() | ~F.coalesce(pre_ok, F.lit(False))
     return df.select(

@@ -1,14 +1,13 @@
-"""Catalog load / frontier upsert (S1/SO2) with Bloom-gated inserts.
+"""Catalog load / frontier upsert (S1/SO2) as one keyed MERGE.
 
 Reference: udata_hydra/cli/catalog.py:20-113 — download the data.gouv
 catalog CSV (`;`-separated), soft-delete everything, upsert each
 non-archived row, then reset stuck statuses. Here one declarative job:
 
-read CSV → project/clean → Bloom-probe against the URL-seen shards
-(only genuinely-new URLs go through the expensive MERGE path at
-10^10-frontier scale) → MERGE INTO frontier (update metadata of known
-resources, insert new ones, soft-delete gone ones) → update the seen
-shards.
+read CSV → project/clean → MERGE INTO frontier as one full-outer join
+on resource_id (update metadata of known resources, insert new ones,
+soft-delete gone ones) → OR the URLs new to the frontier into the
+URL-seen shards.
 """
 
 from __future__ import annotations
@@ -67,67 +66,56 @@ def upsert_catalog(
     incoming: DataFrame,
     cfg: HydraConfig = DEFAULT,
     mark_missing_deleted: bool = True,
-    use_seen: bool = True,
 ) -> dict:
-    """MERGE the incoming catalog into the frontier.
+    """MERGE the incoming catalog into the frontier: ONE full-outer join
+    on resource_id, the MERGE key (cli/catalog.py:61-76 INSERT ... ON
+    CONFLICT (resource_id) DO UPDATE).
 
-    - matched resource_id  → refresh metadata, undelete
-    - new resource_id      → insert (Bloom pre-filter: rows whose URL the
-      seen-set definitely hasn't seen skip the expensive anti-join)
+    - matched resource_id  → refresh metadata (a NULL incoming value
+      keeps the stored one; a moved URL also moves its host_bucket),
+      undelete
+    - new resource_id      → insert the row as `as_frontier_rows` builds it
     - missing from incoming→ soft-delete (UPDATE catalog SET deleted,
       cli/catalog.py:49-56) when mark_missing_deleted
+
+    The seen shards then learn the incoming URLs the frontier did not
+    hold: the inserted resources' URLs and the moved URLs of matched ones.
     """
     frontier = store.frontier.read(spark)
     inc = as_frontier_rows(incoming, cfg)
 
-    bloom = BloomSeenSet(n_shards=cfg.bloom_shards, fpp=cfg.bloom_fpp)
-    if use_seen and store.seen.exists():
-        shards = store.seen.read(spark)
-        probed = bloom.check(inc, shards).persist()
-        # definitely-new URLs (seen=False is exact for Bloom)
-        fresh = probed.where(~F.col("seen")).select(*FRONTIER_SCHEMA.fieldNames())
-        # possibly-known: resolve FPs/updates with the real anti-join
-        maybe = probed.where(F.col("seen")).select(*FRONTIER_SCHEMA.fieldNames())
-    else:
-        fresh = None
-        maybe = inc
+    refreshed = ("dataset_id", "url", "harvest_modified_at", "format", "title")
+    # frontier keys are never NULL: a NULL one marks an incoming-only row
+    in_fr = F.col("resource_id").isNotNull()
 
-    key = F.col("resource_id")
-    existing_keys = frontier.select("resource_id")
-    updates = maybe.join(existing_keys, "resource_id", "inner")
-    new_from_maybe = maybe.join(existing_keys, "resource_id", "left_anti")
-    inserts = new_from_maybe if fresh is None else fresh.unionByName(new_from_maybe)
+    def merged_col(c: str):
+        if c == "resource_id":
+            return F.coalesce(F.col(c), F.col("_n_resource_id"))
+        if c in refreshed:
+            return F.coalesce(F.col(f"_n_{c}"), F.col(c))
+        if c == "deleted" and mark_missing_deleted:
+            return F.when(in_fr, F.col("_n_resource_id").isNull()).otherwise(F.col("_n_deleted"))
+        kept = F.when(in_fr, F.col(c)).otherwise(F.col(f"_n_{c}"))
+        if c == "host_bucket":
+            # the bucket hashes the URL's host, and the claim's per-domain
+            # cap counts within one bucket: a moved URL takes its new one
+            return F.when(F.col("_n_url") != F.col("url"), F.col("_n_host_bucket")).otherwise(kept)
+        return kept
 
-    upd = updates.select(
-        key.alias("_rid"),
-        F.col("dataset_id").alias("_dsid"),
-        F.col("url").alias("_url"),
-        F.col("harvest_modified_at").alias("_hma"),
-        F.col("format").alias("_fmt"),
-        F.col("title").alias("_title"),
+    j = frontier.join(
+        inc.select(*[F.col(c).alias(f"_n_{c}") for c in inc.columns]),
+        F.col("resource_id") == F.col("_n_resource_id"),
+        "full_outer",
     )
-    merged = (
-        frontier.join(upd, frontier.resource_id == upd._rid, "left")
-        .withColumn("dataset_id", F.coalesce("_dsid", "dataset_id"))
-        .withColumn("url", F.coalesce("_url", "url"))
-        .withColumn("harvest_modified_at", F.coalesce("_hma", "harvest_modified_at"))
-        .withColumn("format", F.coalesce("_fmt", "format"))
-        .withColumn("title", F.coalesce("_title", "title"))
-    )
-    if mark_missing_deleted:
-        merged = merged.withColumn("deleted", F.col("_rid").isNull())
-    merged = merged.drop("_rid", "_dsid", "_url", "_hma", "_fmt", "_title")
-    result = merged.unionByName(inserts)
-
+    result = j.select(*[merged_col(c).alias(c) for c in frontier.columns])
     sid = store.frontier.commit(result, meta={"op": "upsert_catalog"})
 
-    # refresh the seen shards with the inserted URLs
-    if use_seen:
-        ins_urls = inserts.select("url")
-        if store.seen.exists():
-            store.seen.commit(bloom.update(store.seen.read(spark), ins_urls))
-        else:
-            store.seen.commit(bloom.build(result.select("url")))
+    bloom = BloomSeenSet(n_shards=cfg.bloom_shards, fpp=cfg.bloom_fpp)
+    if store.seen.exists():
+        new_urls = inc.select("url").join(frontier.select("url"), "url", "left_anti")
+        store.seen.commit(bloom.update(store.seen.read(spark), new_urls))
+    else:
+        store.seen.commit(bloom.build(result.select("url")))
 
     return {"snapshot": sid}
 

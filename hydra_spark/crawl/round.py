@@ -144,7 +144,14 @@ def run_round(
     # persist the claim: it feeds the politeness split AND the fetch —
     # without this the two selection windows recompute per consumer
     batch = select_batch(frontier, lc, cfg, round_id, now).persist()
-    go, held = split_backoff(batch, domain_backoff(checks, cfg, now, crawl_delays=crawl_delays))
+    # the two decision frames are persisted: the analysis job, the checks
+    # and frontier writes and the round totals all read them, and each
+    # read would otherwise re-run the checks-history aggregate (backoff)
+    # or the per-URL rule match (robots)
+    backoff = domain_backoff(checks, cfg, now, crawl_delays=crawl_delays)
+    if backoff is not None:
+        backoff.persist()
+    go, held = split_backoff(batch, backoff)
     # dispatch on the rule table's shape: RFC tables (from
     # rfc_rules_from_robots_pages) carry a pre-translated regex column
     # and go through full Allow/wildcard precedence; prefix tables keep
@@ -155,6 +162,8 @@ def run_round(
         go, robots_blocked = split_robots_rfc(go, robots_rules, key_col="resource_id")
     else:
         go, robots_blocked = split_robots(go, robots_rules)
+    if robots_blocked is not None:
+        robots_blocked.persist()
 
     if lc is not None:
         # Attach the prev-check columns to the SLIM claim BEFORE the
@@ -487,6 +496,9 @@ def run_round(
     _mark("counts")
     metrics.unpersist()
     batch.unpersist()
+    for decided in (backoff, robots_blocked):
+        if decided is not None:
+            decided.unpersist()
     cur.unpersist()
     parsed.unpersist()
     parse_errs.unpersist()

@@ -5,9 +5,10 @@
 
 Reference cli/catalog.py:20-113: download catalog CSV → mark-deleted
 sweep → per-row UPSERT (skip archived) → stuck-status cleanup. Here the
-whole load is ONE Spark job: read CSV → Bloom-gated MERGE into the
-frontier → missing rows marked deleted → stuck claims reset. Re-running
-with a newer export is the incremental catalog refresh.
+whole load is ONE Spark job: read CSV → MERGE into the frontier (one
+full-outer join on resource_id) → missing rows marked deleted → stuck
+claims reset. Re-running with a newer export is the incremental
+catalog refresh.
 
 Emits one JSON summary line on stdout.
 """

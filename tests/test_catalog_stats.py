@@ -1,4 +1,5 @@
-"""Catalog upsert (S1/SO2 with Bloom-gated inserts) + stats aggregates."""
+"""Catalog upsert (S1/SO2: one MERGE keyed on resource_id, then the seen
+shards learn the new URLs) + stats aggregates."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,6 +10,7 @@ from hydra_spark.config import DEFAULT
 from hydra_spark.crawl.loop import init_state, run_crawl
 from hydra_spark.crawl.round import latest_checks
 from hydra_spark.datagen import generate_frontier, generate_pages
+from hydra_spark.seen import BloomSeenSet
 from hydra_spark.storage import StateStore
 
 CAT_SCHEMA = (
@@ -66,6 +68,27 @@ def test_upsert_seen_set_gates_reinserts(spark, tmp_path):
     upsert_catalog(spark, store, inc)
     upsert_catalog(spark, store, inc)  # idempotent
     assert store.frontier.read(spark).count() == 1
+
+
+def test_upsert_moved_url_updates_in_place(spark, tmp_path):
+    """A known resource_id under a new URL is an UPDATE of that row (the
+    MERGE key is resource_id): it takes the new host's bucket, and the
+    seen shards learn the new URL."""
+    store = StateStore(str(tmp_path))
+    init_state(
+        store,
+        as_frontier_rows(_cat(spark, [("d1", "r1", "http://a.com/1", "main", "csv", None, "one")])),
+    )
+    upsert_catalog(spark, store, _cat(spark, [("d1", "r1", "http://a.com/1", "main", "csv", None, "one")]))
+    moved = _cat(spark, [("d1", "r1", "http://b.org/moved", "main", "csv", None, "one")])
+    upsert_catalog(spark, store, moved)
+    rows = store.frontier.read(spark).where("resource_id = 'r1'").collect()
+    assert len(rows) == 1
+    assert rows[0]["url"] == "http://b.org/moved" and not rows[0]["deleted"]
+    assert rows[0]["host_bucket"] == as_frontier_rows(moved).first()["host_bucket"]
+    bloom = BloomSeenSet(n_shards=DEFAULT.bloom_shards, fpp=DEFAULT.bloom_fpp)
+    probe = spark.createDataFrame([("http://b.org/moved",)], "url string")
+    assert bloom.check(probe, store.seen.read(spark)).first()["seen"]
 
 
 def test_status_and_resources_stats(spark, crawled):

@@ -125,6 +125,65 @@ def test_compaction_preserves_resume_equality(spark, corpus, tmp_path):
     assert fa == fb
 
 
+def test_round_totals_split_the_claim(spark, tmp_path):
+    """Backoff, robots and fetch partition the claim, and the summary's
+    totals count what the round wrote: n_backoff its BACKOFF frontier
+    deltas, n_robots_blocked its robots-error checks."""
+    from pyspark.sql import functions as F
+
+    from hydra_spark.crawl.robots import (
+        ROBOTS_ERROR,
+        crawl_delays_from_robots_pages,
+        rfc_rules_from_robots_pages,
+    )
+    from hydra_spark.crawl.round import reset_stuck
+
+    pages = generate_pages(spark, 600, n_hosts=8).cache()
+    frontier = generate_frontier(spark, pages)
+    domains = frontier.selectExpr("parse_url(url, 'HOST') AS domain").distinct()
+    # two independent host sets: "slow" hosts declare a 30 s crawl delay
+    # (a budget of 360/30 = 12 requests per backoff window), "closed"
+    # hosts disallow everything but /dataset/ (RFC Allow carve-out)
+    slow = F.pmod(F.xxhash64("domain"), F.lit(3)) == 0
+    closed = F.pmod(F.hash("domain"), F.lit(2)) == 0
+    body = F.concat(
+        F.lit("User-agent: *\n"),
+        F.when(slow, F.lit("Crawl-delay: 30\n")).otherwise(F.lit("")),
+        F.when(closed, F.lit("Disallow: /\nAllow: /dataset/\n")).otherwise(F.lit("Disallow:\n")),
+    )
+    robots_pages = domains.select("domain", F.encode(body, "utf-8").alias("body"))
+    rules = rfc_rules_from_robots_pages(robots_pages).cache()
+    delays = crawl_delays_from_robots_pages(robots_pages).cache()
+
+    store = StateStore(str(tmp_path))
+    init_state(store, frontier)
+    crawl = dict(robots_rules=rules, crawl_delays=delays, start_now="2025-01-15 00:00:00")
+    # round 1 checks 15 URLs of every host; round 2, a minute later,
+    # holds the slow hosts, whose 15 checks exceed their budget of 12
+    run_crawl(spark, store, pages, DEFAULT.with_(batch_size=120, backoff_nb_req=10**6), **crawl)
+    cfg = DEFAULT.with_(batch_size=600, backoff_nb_req=20)
+    now = "2025-01-15 00:01:00"
+    claim = select_batch(
+        reset_stuck(store.frontier.read(spark), cfg, now), store.latest_checks_view(spark), cfg, 2, now
+    )
+    claimed = {r["resource_id"] for r in claim.collect()}
+    [res] = run_crawl(spark, store, pages, cfg, **crawl)
+    assert res["now"] == now
+
+    deltas = store.frontier.deltas.read(spark).where(F.col("_delta_round") == 2)
+    held = [r["_urid"] for r in deltas.where(F.col("_upd") == "backoff").collect()]
+    checks = store.checks.read(spark).where(F.col("created_at") == F.to_timestamp(F.lit(now)))
+    is_robots = F.coalesce(F.col("error") == ROBOTS_ERROR, F.lit(False))
+    blocked = [r["resource_id"] for r in checks.where(is_robots).collect()]
+    checked = [r["resource_id"] for r in checks.where(~is_robots).collect()]
+    assert res["n_backoff"] == len(held) > 0
+    assert res["n_robots_blocked"] == len(blocked) > 0
+    assert res["n_checked"] == len(checked) > 0
+    held, blocked, checked = set(held), set(blocked), set(checked)
+    assert not (held & blocked) and not (held & checked) and not (blocked & checked)
+    assert held | blocked | checked == claimed
+
+
 def _skewed_frontier(spark, hot_n, cold_hosts, cold_n_each):
     """Frontier with one hot domain (hot_n URLs) + cold_hosts domains of
     cold_n_each — only the columns select_batch reads."""

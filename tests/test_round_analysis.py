@@ -260,6 +260,9 @@ def test_route_python_boundary_matches_python_twin(spark):
         ("audio/x-wav", wav, None),  # binary: python lane, must not crash
         ("text/csv", latin1_csv, None),  # invalid UTF-8: python lane
         ("application/gzip", __import__("gzip").compress(b"x,y\n1,2", mtime=0), None),
+        # valid UTF-8 under a text mime, but with the zip magic: the
+        # python twin tries it as xlsx, so it must not take the text lane
+        ("text/plain", b"PK\x03\x04 not a zip", None),
     ]
     df = spark.createDataFrame(
         [
@@ -277,5 +280,5 @@ def test_route_python_boundary_matches_python_twin(spark):
     by_url = {r["url"]: r for r in shipped}
     assert by_url["u0"]["html"] is None and by_url["u0"]["pre_text"] == "hello"
     assert by_url["u4"]["html"] is None and by_url["u4"]["pre_text"] == ""
-    for u in ("u3", "u5", "u6", "u7"):  # python lane keeps its bytes
+    for u in ("u3", "u5", "u6", "u7", "u9"):  # python lane keeps its bytes
         assert by_url[u]["html"] is not None and by_url[u]["pre_text"] is None
