@@ -60,6 +60,12 @@ def as_frontier_rows(catalog: DataFrame, cfg: HydraConfig = DEFAULT) -> DataFram
     return out.select(*FRONTIER_SCHEMA.fieldNames()).dropDuplicates(["resource_id"])
 
 
+def _moved_bucket(new_url, old_url, new_bucket, kept):
+    """The bucket hashes the URL's host, and the claim's per-domain cap
+    counts within one bucket: a moved URL takes its new one."""
+    return F.when(new_url != old_url, new_bucket).otherwise(kept)
+
+
 def upsert_catalog(
     spark: SparkSession,
     store: StateStore,
@@ -97,9 +103,7 @@ def upsert_catalog(
             return F.when(in_fr, F.col("_n_resource_id").isNull()).otherwise(F.col("_n_deleted"))
         kept = F.when(in_fr, F.col(c)).otherwise(F.col(f"_n_{c}"))
         if c == "host_bucket":
-            # the bucket hashes the URL's host, and the claim's per-domain
-            # cap counts within one bucket: a moved URL takes its new one
-            return F.when(F.col("_n_url") != F.col("url"), F.col("_n_host_bucket")).otherwise(kept)
+            return _moved_bucket(F.col("_n_url"), F.col("url"), F.col("_n_host_bucket"), kept)
         return kept
 
     j = frontier.join(
@@ -172,6 +176,13 @@ def insert_resource(
         merged = (
             frontier.join(upd, frontier.resource_id == upd._rid, "left")
             .withColumn("dataset_id", F.coalesce("_dsid", "dataset_id"))
+            .withColumn(
+                "host_bucket",
+                _moved_bucket(
+                    F.col("_url"), F.col("url"),
+                    host_bucket("_url", cfg.frontier_buckets), F.col("host_bucket"),
+                ),
+            )
             .withColumn("url", F.coalesce("_url", "url"))
             .withColumn("type", F.coalesce("_type", "type"))
             .withColumn("format", F.coalesce("_fmt", "format"))

@@ -4,16 +4,22 @@ The reference crawls data.gouv-registered resources and does not parse
 robots.txt; the north rule requires robots enforcement alongside the
 politeness budgets, so it is a first-class stage here:
 
-- rules live in a `robots_rules(domain, disallow_prefix)` table — in
-  production parsed from each host's robots.txt during a discovery
-  round; in this sandbox synthesized deterministically per host.
-- enforcement is a broadcast join + `startswith` on the URL path: rows
-  matching a disallowed prefix are split out and recorded as error
-  checks (never fetched), mirroring how the excluded-pattern clause
-  works (F1) but data-driven per host.
+- each host's robots.txt body is read once, by one RFC 9309 group
+  scanner (`_agent_lines`): consecutive User-agent lines share a group,
+  and an exact agent match beats the `*` groups entirely. The rules
+  and the Crawl-delay are both read from the groups it returns.
+- rules live in a `robots_rules(domain, pattern, regex, is_allow)`
+  table built by `rfc_rules_from_robots_pages` (python runs once per
+  HOST row, never per URL); `regex` is the pattern pre-translated for
+  the JVM.
+- `split_robots_rfc` is the one matcher: a broadcast join of the batch
+  against the rule rows on domain + `regexp_like` of the URL path, then
+  the longest matching pattern wins (Allow on a tie). Blocked rows are
+  recorded as error checks (never fetched), mirroring how the
+  excluded-pattern clause works (F1) but data-driven per host.
 
 Scale: the rule table is ~hosts-sized (≪ frontier), always broadcast;
-the path test is a pure column expression.
+the winner window shuffles one batch-sized frame per round.
 """
 
 from __future__ import annotations
@@ -24,66 +30,92 @@ from pyspark.sql import functions as F
 ROBOTS_ERROR = "blocked by robots.txt"
 
 
-def parse_robots_txt(body: str, agent: str = "hydra") -> list[str]:
-    """Disallow prefixes that apply to `agent` from a robots.txt body.
-
-    Standard subset (RFC 9309 semantics, like the reference's aiohttp
-    stack would see): user-agent groups (consecutive User-agent lines
-    share one group), most-specific group wins (an exact agent match
-    beats `*` — and then `*` groups are ignored entirely), `Disallow:`
-    with an empty value allows everything, comments (#) and unknown
-    directives (Crawl-delay, Sitemap, Allow) are skipped — Allow-based
-    carve-outs are rare on data portals and a prefix-only model stays
-    vectorizable (split_robots matches prefixes JVM-side)."""
-    groups: list[tuple[list[str], list[str]]] = []  # (agents, disallows)
-    cur_agents: list[str] = []
-    cur_rules: list[str] | None = None
+def _agent_lines(body: str, agent: str) -> list[list[tuple[str, str]]]:
+    """The (key, value) lines of each robots.txt group that applies to
+    `agent`, one list per group in file order. Keys are lower-cased;
+    comments (#), lines without a colon and lines before the first
+    User-agent are skipped. Consecutive User-agent lines share one
+    group; an exact agent match beats `*`, and then the `*` groups are
+    ignored entirely (RFC 9309 §2.2.1)."""
+    agent = agent.lower()
+    groups: list[tuple[list[str], list[tuple[str, str]]]] = []
+    agents: list[str] = []
+    lines: list[tuple[str, str]] | None = None
     for raw in body.splitlines():
         line = raw.split("#", 1)[0].strip()
-        if not line or ":" not in line:
+        if ":" not in line:
             continue
         key, _, val = line.partition(":")
         key, val = key.strip().lower(), val.strip()
         if key == "user-agent":
-            if cur_rules is not None:  # a directive closed the previous group
-                groups.append((cur_agents, cur_rules))
-                cur_agents, cur_rules = [], None
-            cur_agents.append(val.lower())
-        elif key == "disallow":
-            if cur_rules is None:
-                cur_rules = []
-            if cur_agents and val:
-                cur_rules.append(val)
-        # other directives (allow, crawl-delay, sitemap) close the
-        # agent-line run but are not modeled
-        elif cur_agents and cur_rules is None:
-            cur_rules = []
-    if cur_agents:
-        groups.append((cur_agents, cur_rules or []))
-
-    exact = [d for agents, rules in groups if agent.lower() in agents for d in rules]
-    if any(agent.lower() in agents for agents, _ in groups):
-        return exact
-    return [d for agents, rules in groups if "*" in agents for d in rules]
+            if lines is not None:  # a rule line closed the previous group
+                groups.append((agents, lines))
+                agents, lines = [], None
+            agents.append(val.lower())
+        elif agents:
+            if lines is None:
+                lines = []
+            lines.append((key, val))
+    if agents:
+        groups.append((agents, lines or []))
+    exact = [ls for names, ls in groups if agent in names]
+    return exact or [ls for names, ls in groups if "*" in names]
 
 
-def rules_from_robots_pages(
-    robots_pages: DataFrame, agent: str = "hydra"
-) -> DataFrame:
-    """(domain, body) robots.txt fetches → the `robots_rules(domain,
-    disallow_prefix)` table split_robots consumes. The parse is an
-    Arrow-batched mapInPandas (python, but over one tiny row per HOST —
-    not per URL, so it never touches the frontier's scale axis)."""
+def parse_robots_rules(body: str, agent: str = "hydra") -> list[tuple[str, bool]]:
+    """(pattern, is_allow) pairs for the groups that apply to `agent`,
+    keeping `Allow:` lines and wildcard patterns intact (RFC 9309
+    §2.2.2-2.2.3: `*` matches any octet sequence, a trailing `$` anchors
+    the end). An empty value is a no-op rule."""
+    return [
+        (val, key == "allow")
+        for group in _agent_lines(body, agent)
+        for key, val in group
+        if key in ("disallow", "allow") and val
+    ]
+
+
+def parse_crawl_delay(body: str, agent: str = "hydra") -> float | None:
+    """Crawl-delay seconds applying to `agent`: the first applying group
+    that declares a parseable one (the last such line in that group).
+    The directive is non-standard but ubiquitous, and big crawlers
+    honor it."""
+    for group in _agent_lines(body, agent):
+        delay = None
+        for key, val in group:
+            if key == "crawl-delay":
+                try:
+                    delay = float(val)
+                except ValueError:
+                    pass
+        if delay is not None:
+            return delay
+    return None
+
+
+def robots_pattern_regex(pattern: str) -> str:
+    """RFC 9309 path pattern → anchored regex: literal segments are
+    escaped, `*` becomes `.*`, a trailing `$` becomes the end anchor.
+    re.escape (3.7+) only backslashes regex metacharacters, all of
+    which escape identically in Java regex and RE2 — the same string
+    drives Spark's regexp_like and any SQL oracle."""
+    import re as _re
+
+    anchored = pattern.endswith("$")
+    if anchored:
+        pattern = pattern[:-1]
+    rx = "^" + ".*".join(_re.escape(p) for p in pattern.split("*"))
+    return rx + "$" if anchored else rx
+
+
+def _per_host(robots_pages: DataFrame, schema: str, rows_of) -> DataFrame:
+    """(domain, body) robots.txt fetches → rows of the DDL `schema`, the ones
+    `rows_of(domain, text)` yields for each host with a body. An
+    Arrow-batched mapInPandas: python, but over one tiny row per HOST —
+    not per URL, so it never touches the frontier's scale axis."""
     import pandas as pd
 
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("domain", T.StringType()),
-            T.StructField("disallow_prefix", T.StringType()),
-        ]
-    )
+    columns = [field.split()[0] for field in schema.split(",")]
 
     def gen(batches):
         for pdf in batches:
@@ -91,50 +123,46 @@ def rules_from_robots_pages(
             for domain, body in pdf[["domain", "body"]].itertuples(index=False):
                 if body is None:
                     continue
-                text = bytes(body).decode("utf-8", "replace") if isinstance(body, (bytes, bytearray)) else body
-                for prefix in parse_robots_txt(text, agent):
-                    rows.append((domain, prefix))
-            yield pd.DataFrame(rows, columns=["domain", "disallow_prefix"])
+                text = (
+                    bytes(body).decode("utf-8", "replace")
+                    if isinstance(body, (bytes, bytearray))
+                    else body
+                )
+                rows.extend(rows_of(domain, text))
+            yield pd.DataFrame(rows, columns=columns)
 
     return robots_pages.mapInPandas(gen, schema=schema)
 
 
-def synthetic_robots_rules(pages_or_frontier: DataFrame) -> DataFrame:
-    """Deterministic per-host rules for the synthetic corpus: every
-    fifth host (by murmur3 of its domain) disallows `/private/`."""
-    from hydra_spark.functions.urls import url_domain
+def rfc_rules_from_robots_pages(
+    robots_pages: DataFrame, agent: str = "hydra"
+) -> DataFrame:
+    """(domain, body) fetches → the `(domain, pattern, regex, is_allow)`
+    table `split_robots_rfc` consumes."""
+    schema = "domain string, pattern string, regex string, is_allow boolean"
 
-    domains = pages_or_frontier.select(url_domain("url").alias("domain")).distinct()
-    return (
-        domains.where(F.col("domain").isNotNull())
-        .where(F.pmod(F.hash("domain"), F.lit(5)) == 0)
-        .select("domain", F.lit("/private/").alias("disallow_prefix"))
-    )
+    def rows_of(domain, text):
+        for pat, is_allow in parse_robots_rules(text, agent):
+            yield domain, pat, robots_pattern_regex(pat), is_allow
+
+    return _per_host(robots_pages, schema, rows_of)
 
 
-def split_robots(batch: DataFrame, rules: DataFrame | None):
-    """(allowed, blocked): batch rows whose URL path starts with ANY
-    disallowed prefix for their domain are blocked. `batch` must carry
-    a `domain` column (select_batch provides it).
+def crawl_delays_from_robots_pages(
+    robots_pages: DataFrame, agent: str = "hydra"
+) -> DataFrame:
+    """(domain, body) → `crawl_delays(domain, crawl_delay)` — feed to
+    `backoff.domain_backoff(crawl_delays=...)` to turn each host's
+    declared delay into a per-domain request budget. Hosts without a
+    positive delay get no row."""
+    schema = "domain string, crawl_delay double"
 
-    `blocked` is a LEFT-SEMI join of the batch against the (broadcast)
-    rule rows on domain + prefix-match, `allowed` the matching
-    LEFT-ANTI: a row-per-rule left join would (a) leak a URL blocked by
-    one prefix into `allowed` via the other rule rows and (b) duplicate
-    every allowed URL once per rule — real robots.txt files have many
-    Disallow lines. Semi/anti produce each batch row at most once by
-    construction, and the prefix test is a plain join predicate (no
-    higher-order functions — this Spark build mis-binds outer row
-    references inside exists()/filter() lambdas pushed around a
-    broadcast join)."""
-    if rules is None:
-        return batch, None
-    path = F.regexp_replace(F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]+", "")
-    r = F.broadcast(rules.withColumnRenamed("domain", "_rdom"))
-    cond = (F.col("domain") == F.col("_rdom")) & path.startswith(F.col("disallow_prefix"))
-    blocked = batch.join(r, cond, "left_semi")
-    allowed = batch.join(r, cond, "left_anti")
-    return allowed, blocked
+    def rows_of(domain, text):
+        d = parse_crawl_delay(text, agent)
+        if d is not None and d > 0:
+            yield domain, float(d)
+
+    return _per_host(robots_pages, schema, rows_of)
 
 
 def sitemaps_from_robots(
@@ -155,187 +183,18 @@ def sitemaps_from_robots(
     )
 
 
-def parse_crawl_delay(body: str, agent: str = "hydra") -> float | None:
-    """Crawl-delay seconds applying to `agent`, with the same
-    group-resolution semantics as `parse_robots_txt` (exact-agent group
-    wins; `*` only when no exact group exists; the non-standard but
-    ubiquitous directive big crawlers honor)."""
-    groups: list[tuple[list[str], float | None, bool]] = []  # (agents, delay, closed)
-    cur_agents: list[str] = []
-    cur_delay: float | None = None
-    closed = False
-    for raw in body.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, _, val = line.partition(":")
-        key, val = key.strip().lower(), val.strip()
-        if key == "user-agent":
-            if closed:
-                groups.append((cur_agents, cur_delay, closed))
-                cur_agents, cur_delay, closed = [], None, False
-            cur_agents.append(val.lower())
-        else:
-            closed = True
-            if key == "crawl-delay" and cur_agents:
-                try:
-                    cur_delay = float(val)
-                except ValueError:
-                    pass
-    if cur_agents:
-        groups.append((cur_agents, cur_delay, closed))
-    exact = [d for agents, d, _ in groups if agent.lower() in agents and d is not None]
-    if any(agent.lower() in agents for agents, _, _ in groups):
-        return exact[0] if exact else None
-    star = [d for agents, d, _ in groups if "*" in agents and d is not None]
-    return star[0] if star else None
-
-
-def crawl_delays_from_robots_pages(
-    robots_pages: DataFrame, agent: str = "hydra"
-) -> DataFrame:
-    """(domain, body) → `crawl_delays(domain, crawl_delay)` — feed to
-    `backoff.domain_backoff(crawl_delays=...)` to turn each host's
-    declared delay into a per-domain request budget. Same
-    one-row-per-host scale shape as `rules_from_robots_pages`."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("domain", T.StringType()),
-            T.StructField("crawl_delay", T.DoubleType()),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for domain, body in pdf[["domain", "body"]].itertuples(index=False):
-                if body is None:
-                    continue
-                text = (
-                    bytes(body).decode("utf-8", "replace")
-                    if isinstance(body, (bytes, bytearray))
-                    else body
-                )
-                d = parse_crawl_delay(text, agent)
-                if d is not None and d > 0:
-                    rows.append((domain, float(d)))
-            yield pd.DataFrame(rows, columns=["domain", "crawl_delay"])
-
-    return robots_pages.mapInPandas(gen, schema=schema)
-
-
-# ---------------------------------------------------------------------------
-# RFC 9309 full matching (Allow + wildcards + $), next to the fast
-# prefix-only path above
-# ---------------------------------------------------------------------------
-
-
-def parse_robots_rules(body: str, agent: str = "hydra") -> list[tuple[str, bool]]:
-    """Full-rule variant of `parse_robots_txt`: (pattern, is_allow)
-    pairs for the group that applies to `agent`, keeping `Allow:` lines
-    and wildcard patterns intact (RFC 9309 §2.2.2-2.2.3: `*` matches
-    any octet sequence, a trailing `$` anchors the end). Same group
-    semantics as the prefix parser: consecutive User-agent lines share
-    a group, an exact agent match beats `*` groups entirely, and an
-    empty value is a no-op rule."""
-    groups: list[tuple[list[str], list[tuple[str, bool]]]] = []
-    cur_agents: list[str] = []
-    cur_rules: list[tuple[str, bool]] | None = None
-    for raw in body.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        key, _, val = line.partition(":")
-        key, val = key.strip().lower(), val.strip()
-        if key == "user-agent":
-            if cur_rules is not None:
-                groups.append((cur_agents, cur_rules))
-                cur_agents, cur_rules = [], None
-            cur_agents.append(val.lower())
-        elif key in ("disallow", "allow"):
-            if cur_rules is None:
-                cur_rules = []
-            if cur_agents and val:
-                cur_rules.append((val, key == "allow"))
-        elif cur_agents and cur_rules is None:
-            cur_rules = []
-    if cur_agents:
-        groups.append((cur_agents, cur_rules or []))
-
-    exact = [r for agents, rules in groups if agent.lower() in agents for r in rules]
-    if any(agent.lower() in agents for agents, _ in groups):
-        return exact
-    return [r for agents, rules in groups if "*" in agents for r in rules]
-
-
-def robots_pattern_regex(pattern: str) -> str:
-    """RFC 9309 path pattern → anchored regex: literal segments are
-    escaped, `*` becomes `.*`, a trailing `$` becomes the end anchor.
-    re.escape (3.7+) only backslashes regex metacharacters, all of
-    which escape identically in Java regex and RE2 — the same string
-    drives Spark's regexp_like and any SQL oracle."""
-    import re as _re
-
-    anchored = pattern.endswith("$")
-    if anchored:
-        pattern = pattern[:-1]
-    rx = "^" + ".*".join(_re.escape(p) for p in pattern.split("*"))
-    return rx + "$" if anchored else rx
-
-
-def rfc_rules_from_robots_pages(
-    robots_pages: DataFrame, agent: str = "hydra"
-) -> DataFrame:
-    """(domain, body) fetches → the `(domain, pattern, regex, is_allow)`
-    table `split_robots_rfc` consumes. Same mapInPandas shape as the
-    prefix extractor: python runs once per HOST row, never per URL."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("domain", T.StringType()),
-            T.StructField("pattern", T.StringType()),
-            T.StructField("regex", T.StringType()),
-            T.StructField("is_allow", T.BooleanType()),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for domain, body in pdf[["domain", "body"]].itertuples(index=False):
-                if body is None:
-                    continue
-                text = (
-                    bytes(body).decode("utf-8", "replace")
-                    if isinstance(body, (bytes, bytearray))
-                    else body
-                )
-                for pat, is_allow in parse_robots_rules(text, agent):
-                    rows.append((domain, pat, robots_pattern_regex(pat), is_allow))
-            yield pd.DataFrame(rows, columns=["domain", "pattern", "regex", "is_allow"])
-
-    return robots_pages.mapInPandas(gen, schema=schema)
-
-
 def split_robots_rfc(batch: DataFrame, rules: DataFrame | None, key_col: str = "url"):
-    """(allowed, blocked) under FULL RFC 9309 matching: among the
-    domain's rules whose pattern matches the URL path, the longest
-    pattern (octet length) wins; an Allow beats a Disallow of equal
-    length; no match → allowed. This is the conformance path for
-    Allow-carve-out files ("Disallow: /" + "Allow: /public/") and
-    wildcard rules the prefix fast path `split_robots` cannot express —
-    keep the fast path for prefix-only rule sets (zero shuffle); this
-    one pays ONE batch-sized shuffle (the per-URL winner window) per
-    round, still nothing on the frontier's scale axis. The rule side
-    broadcasts; matching is JVM regexp_like on the pre-translated
-    regex column."""
+    """(allowed, blocked) under RFC 9309 matching: among the domain's
+    rules whose pattern matches the URL path, the longest pattern
+    (octet length) wins; an Allow beats a Disallow of equal length; no
+    match → allowed. `batch` must carry a `domain` column (select_batch
+    provides it) and a unique `key_col`.
+
+    The rule side broadcasts and matching is JVM regexp_like on the
+    pre-translated regex column. A row-per-rule left join feeds the
+    per-URL winner window, so each batch row comes out exactly once —
+    a URL blocked by one rule never leaks into `allowed` via another,
+    and allowed URLs are not duplicated once per rule."""
     if rules is None:
         return batch, None
     path = F.regexp_replace(F.col("url"), r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]+", "")

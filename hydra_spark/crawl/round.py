@@ -24,7 +24,6 @@ from hydra_spark.crawl.backoff import domain_backoff, split_backoff
 from hydra_spark.crawl.change import detect_changes, has_check_changed_expr
 from hydra_spark.crawl.fetch import simulate_fetch
 from hydra_spark.crawl.next_check import next_check_expr
-from hydra_spark.crawl.robots import split_robots
 from hydra_spark.crawl.select_batch import hash_build_side, select_batch
 from hydra_spark.crawl.webhook import webhook_payloads
 from hydra_spark.exceptions import with_exception_flag
@@ -152,17 +151,13 @@ def run_round(
     if backoff is not None:
         backoff.persist()
     go, held = split_backoff(batch, backoff)
-    # dispatch on the rule table's shape: RFC tables (from
-    # rfc_rules_from_robots_pages) carry a pre-translated regex column
-    # and go through full Allow/wildcard precedence; prefix tables keep
-    # the zero-shuffle semi/anti fast path
-    if robots_rules is not None and "regex" in robots_rules.columns:
+    robots_blocked = None
+    if robots_rules is not None:
+        # imported at call time: the module attribute is the one a
+        # tracer patches
         from hydra_spark.crawl.robots import split_robots_rfc
 
         go, robots_blocked = split_robots_rfc(go, robots_rules, key_col="resource_id")
-    else:
-        go, robots_blocked = split_robots(go, robots_rules)
-    if robots_blocked is not None:
         robots_blocked.persist()
 
     if lc is not None:

@@ -224,10 +224,10 @@ def generate_media_pages(
 
 def generate_robots_pages(spark: SparkSession, pages: DataFrame) -> DataFrame:
     """(domain, body): one robots.txt fetch per host of the corpus.
-    Every fifth host (same murmur3 rule as synthetic_robots_rules)
-    disallows /private/ for all agents; the rest allow everything. The
-    bodies carry comment/crawl-delay/sitemap noise so the parser subset
-    is exercised, not just the happy path."""
+    Every fifth host (by murmur3 of its domain: `pmod(hash(domain), 5)
+    == 0`) disallows /private/ for all agents; the rest allow
+    everything. The bodies carry comment/crawl-delay/sitemap noise so
+    the parser is exercised, not just the happy path."""
     from hydra_spark.functions.urls import url_domain
 
     domains = pages.select(url_domain("url").alias("domain")).where(

@@ -41,10 +41,11 @@ def _read_manifest(path: str) -> dict | None:
 class SnapshotTable:
     """A table whose every commit is a full immutable snapshot.
 
-    Used for the frontier and domain-state tables: small relative to the
-    corpus, rewritten per round (Iceberg MERGE analog is copy-on-write
-    here). At 10^10-row frontier scale the real backend is Iceberg
-    MERGE; the commit protocol (write-new, flip pointer) is identical.
+    Used for the frontier base, the URL-seen shards and the folded
+    latest-check view: small relative to the corpus, rewritten whole
+    (Iceberg MERGE analog is copy-on-write here). At 10^10-row frontier
+    scale the real backend is Iceberg MERGE; the commit protocol
+    (write-new, flip pointer) is identical.
     """
 
     def __init__(self, root: str, name: str):
@@ -265,8 +266,6 @@ class FrontierTable:
     - 'backoff': status → 'BACKOFF'
     """
 
-    DELTA_SCHEMA_HINT = "(_urid, _new_last_check, _upd, _upd_at)"
-
     def __init__(self, root: str, name: str = "frontier"):
         self.base = SnapshotTable(root, f"{name}_base")
         self.deltas = AppendLog(root, f"{name}_delta")
@@ -277,9 +276,6 @@ class FrontierTable:
 
     def exists(self) -> bool:
         return self.base.exists()
-
-    def commit_base(self, df: DataFrame, round_id: int | None = None, meta: dict | None = None) -> int:
-        return self.base.commit(df, round_id=round_id, meta=meta)
 
     def commit(self, df: DataFrame, round_id: int | None = None, meta: dict | None = None) -> int:
         """Full-rewrite commit (catalog upsert / init): supersedes any
@@ -435,7 +431,6 @@ class StateStore:
         os.makedirs(self.root, exist_ok=True)
         self.frontier = FrontierTable(self.root, "frontier")
         self.checks = AppendLog(self.root, "checks")
-        self.domain_state = SnapshotTable(self.root, "domain_state")
         self.tables_index = AppendLog(self.root, "tables_index")
         # one log holds both per-round outputs (kind='row'|'text') —
         # written in a single pass/job; the two names are filtered views
@@ -465,7 +460,7 @@ class StateStore:
         for log in (self.checks, self.tables_index, self.outputs, self.outbox, self.metrics):
             dropped += log.prune_after_round(last)
         dropped += self.frontier.prune_after_round(last)
-        for snap in (self.domain_state, self.seen, self.checks_latest):
+        for snap in (self.seen, self.checks_latest):
             dropped += snap.prune_after_round(last)
         return dropped
 

@@ -206,6 +206,19 @@ def test_insert_resource_and_url(spark, tmp_path):
     assert row["title"] == "one-v2" and row["dataset_id"] == "d9"
     assert not row["deleted"]
 
+    # a move to another host takes the new host's bucket: the claim's
+    # per-domain cap counts within one bucket
+    from hydra_spark.functions.urls import host_bucket
+
+    def bucket_of(url):
+        return spark.range(1).select(host_bucket(F.lit(url), DEFAULT.frontier_buckets)).first()[0]
+
+    moved = "http://b.org/moved"
+    assert bucket_of(moved) != bucket_of("http://a.com/1-moved")
+    insert_resource(spark, store, "r1", moved)
+    row = store.frontier.read(spark).where("resource_id='r1'").first()
+    assert row["url"] == moved and row["host_bucket"] == bucket_of(moved)
+
     # external-URL variant: fixed temp_external dataset + defaults
     res = insert_url(spark, store, "http://ext.org/file.csv", "rext")
     assert res["action"] == "insert"

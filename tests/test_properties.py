@@ -10,7 +10,7 @@ from hypothesis import strategies as st
 
 from hydra_spark.analysis.casting import detect_column_type, smart_cast_cell
 from hydra_spark.analysis.xlsx import xlsx_bytes, xlsx_rows
-from hydra_spark.crawl.robots import parse_robots_txt
+from hydra_spark.crawl.robots import parse_crawl_delay, parse_robots_rules
 
 # printable cell text without the XML-hostile control range
 cell_text = st.text(
@@ -46,11 +46,14 @@ def test_xlsx_codec_roundtrip_property(rows):
 @settings(max_examples=100, deadline=None)
 @given(st.text(max_size=300), st.sampled_from(["hydra", "googlebot", "*"]))
 def test_parse_robots_never_crashes(body, agent):
-    """Arbitrary garbage robots.txt parses to a (possibly empty) prefix
-    list — never an exception (production robots files are garbage)."""
-    out = parse_robots_txt(body, agent)
+    """Arbitrary garbage robots.txt parses to a (possibly empty) rule
+    list and an optional delay — never an exception (production robots
+    files are garbage)."""
+    out = parse_robots_rules(body, agent)
     assert isinstance(out, list)
-    assert all(isinstance(p, str) and p for p in out)
+    assert all(isinstance(p, str) and p and isinstance(a, bool) for p, a in out)
+    delay = parse_crawl_delay(body, agent)
+    assert delay is None or isinstance(delay, float)
 
 
 @settings(max_examples=100, deadline=None)

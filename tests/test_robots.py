@@ -1,11 +1,40 @@
 """robots.txt gating (north rule): disallowed URLs are never fetched,
 recorded as error checks, and deferred by the max delay."""
 
+from pyspark.sql import functions as F
+
 from hydra_spark.config import DEFAULT
 from hydra_spark.crawl.loop import init_state, run_crawl
-from hydra_spark.crawl.robots import ROBOTS_ERROR, split_robots, synthetic_robots_rules
-from hydra_spark.datagen import generate_frontier, generate_pages
+from hydra_spark.crawl.robots import (
+    ROBOTS_ERROR,
+    parse_robots_rules,
+    rfc_rules_from_robots_pages,
+    split_robots_rfc,
+)
+from hydra_spark.datagen import generate_frontier, generate_pages, generate_robots_pages
+from hydra_spark.functions.urls import url_domain
 from hydra_spark.storage import StateStore
+
+
+def _disallow_rules(spark, domain, prefixes):
+    """The rule table of one host whose robots.txt is Disallow lines only."""
+    body = "User-agent: *\n" + "".join(f"Disallow: {p}\n" for p in prefixes)
+    return rfc_rules_from_robots_pages(
+        spark.createDataFrame([(domain, body)], "domain string, body string")
+    )
+
+
+def _fifth_hosts(pages):
+    """The hosts generate_robots_pages gives `Disallow: /private/`."""
+    domains = pages.select(url_domain("url").alias("domain")).distinct()
+    return {
+        r["domain"]
+        for r in domains.where(F.pmod(F.hash("domain"), F.lit(5)) == 0).collect()
+    }
+
+
+def _disallows(body, agent):
+    return [p for p, is_allow in parse_robots_rules(body, agent) if not is_allow]
 
 
 def test_split_robots(spark):
@@ -17,8 +46,8 @@ def test_split_robots(spark):
         ],
         "resource_id string, url string, domain string",
     )
-    rules = spark.createDataFrame([("a.com", "/private/")], "domain string, disallow_prefix string")
-    allowed, blocked = split_robots(batch, rules)
+    rules = _disallow_rules(spark, "a.com", ["/private/"])
+    allowed, blocked = split_robots_rfc(batch, rules, key_col="resource_id")
     assert {r["resource_id"] for r in blocked.collect()} == {"r1"}
     assert {r["resource_id"] for r in allowed.collect()} == {"r2", "r3"}
 
@@ -26,8 +55,9 @@ def test_split_robots(spark):
 def test_round_with_robots(spark, tmp_path):
     pages = generate_pages(spark, 1500, n_hosts=10).cache()
     frontier = generate_frontier(spark, pages)
-    rules = synthetic_robots_rules(pages)
-    assert rules.count() > 0
+    rules = rfc_rules_from_robots_pages(generate_robots_pages(spark, pages))
+    ruled = _fifth_hosts(pages)
+    assert ruled
     store = StateStore(str(tmp_path))
     init_state(store, frontier)
     res = run_crawl(
@@ -37,7 +67,6 @@ def test_round_with_robots(spark, tmp_path):
     checks = store.checks.read(spark)
     blocked = checks.where(checks.error == ROBOTS_ERROR).collect()
     assert len(blocked) == res[0]["n_robots_blocked"]
-    ruled = {r["domain"] for r in rules.collect()}
     for r in blocked:
         assert "/private/" in r["url"] and r["domain"] in ruled
         assert r["status"] is None and r["checksum"] is None
@@ -61,20 +90,16 @@ def test_split_robots_multiple_prefixes_per_domain(spark):
         ],
         "resource_id string, url string, domain string",
     )
-    rules = spark.createDataFrame(
-        [("a.com", "/private/"), ("a.com", "/tmp/"), ("a.com", "/admin/")],
-        "domain string, disallow_prefix string",
-    )
-    allowed, blocked = split_robots(batch, rules)
+    rules = _disallow_rules(spark, "a.com", ["/private/", "/tmp/", "/admin/"])
+    allowed, blocked = split_robots_rfc(batch, rules, key_col="resource_id")
     allowed_rows = allowed.collect()
-    assert {r["resource_id"] for r in blocked.collect()} == {"r1", "r2"}
+    blocked_rows = blocked.collect()
+    assert {r["resource_id"] for r in blocked_rows} == {"r1", "r2"}
     assert {r["resource_id"] for r in allowed_rows} == {"r3", "r4"}
-    assert len(allowed_rows) == 2  # no per-rule duplication
+    assert len(allowed_rows) == 2 and len(blocked_rows) == 2  # no per-rule duplication
 
 
 def test_parse_robots_txt_truth_table():
-    from hydra_spark.crawl.robots import parse_robots_txt
-
     body = (
         "# comment\n"
         "User-agent: *\n"
@@ -86,36 +111,31 @@ def test_parse_robots_txt_truth_table():
         "User-agent: googlebot\n"
         "Disallow: /gb-only/\n"
     )
-    assert parse_robots_txt(body, "hydra") == ["/private/", "/tmp/"]
-    assert parse_robots_txt(body, "googlebot") == ["/gb-only/"]  # exact beats *
+    assert _disallows(body, "hydra") == ["/private/", "/tmp/"]
+    assert _disallows(body, "googlebot") == ["/gb-only/"]  # exact beats *
 
     # consecutive User-agent lines share one group
     shared = "User-agent: a\nUser-agent: *\nDisallow: /x/\n"
-    assert parse_robots_txt(shared, "hydra") == ["/x/"]
-    assert parse_robots_txt(shared, "a") == ["/x/"]
+    assert _disallows(shared, "hydra") == ["/x/"]
+    assert _disallows(shared, "a") == ["/x/"]
 
     # a specific-agent group with no disallows means ALLOW ALL for it
     carve = "User-agent: hydra\nDisallow:\n\nUser-agent: *\nDisallow: /y/\n"
-    assert parse_robots_txt(carve, "hydra") == []
-    assert parse_robots_txt(carve, "other") == ["/y/"]
+    assert _disallows(carve, "hydra") == []
+    assert _disallows(carve, "other") == ["/y/"]
 
-    assert parse_robots_txt("", "hydra") == []
-    assert parse_robots_txt("Disallow: /orphan/\n", "hydra") == []  # no UA group
+    assert _disallows("", "hydra") == []
+    assert _disallows("Disallow: /orphan/\n", "hydra") == []  # no UA group
 
 
 def test_rules_from_robots_pages_match_synthetic(spark):
-    """Parsing the synthetic robots.txt corpus reproduces the rule
-    table the crawl tests run against — robots gating is data-driven
-    end to end."""
-    from hydra_spark.datagen import generate_robots_pages
-
+    """Parsing the synthetic robots.txt corpus yields exactly the
+    every-fifth-host `/private/` rule the corpus was generated with —
+    robots gating is data-driven end to end."""
     pages = generate_pages(spark, 1000, n_hosts=12).cache()
-    from hydra_spark.crawl.robots import rules_from_robots_pages
-
-    parsed = rules_from_robots_pages(generate_robots_pages(spark, pages))
-    synthetic = synthetic_robots_rules(pages)
-    a = {(r["domain"], r["disallow_prefix"]) for r in parsed.collect()}
-    b = {(r["domain"], r["disallow_prefix"]) for r in synthetic.collect()}
+    parsed = rfc_rules_from_robots_pages(generate_robots_pages(spark, pages))
+    a = {(r["domain"], r["pattern"], r["is_allow"]) for r in parsed.collect()}
+    b = {(d, "/private/", False) for d in _fifth_hosts(pages)}
     assert a == b and a
 
 
@@ -159,8 +179,6 @@ class TestRfcMatching:
     )
 
     def test_parse_keeps_allow_and_wildcards(self):
-        from hydra_spark.crawl.robots import parse_robots_rules
-
         assert parse_robots_rules(self.BODY) == [
             ("/private/", False),
             ("/private/open/", True),
@@ -187,11 +205,6 @@ class TestRfcMatching:
         assert re.search(robots_pattern_regex("/a+b(c)"), "/a+b(c)/d")
 
     def test_split_robots_rfc_precedence(self, spark):
-        from hydra_spark.crawl.robots import (
-            rfc_rules_from_robots_pages,
-            split_robots_rfc,
-        )
-
         pages = spark.createDataFrame(
             [("h.example", self.BODY.encode())], "domain string, body binary"
         )
@@ -216,11 +229,6 @@ class TestRfcMatching:
         assert set(allowed.columns) == {"url", "domain"}
 
     def test_equal_length_tie_prefers_allow(self, spark):
-        from hydra_spark.crawl.robots import (
-            rfc_rules_from_robots_pages,
-            split_robots_rfc,
-        )
-
         body = "User-agent: *\nDisallow: /page\nAllow: /page\n"
         pages = spark.createDataFrame(
             [("h.example", body.encode())], "domain string, body binary"
@@ -232,13 +240,9 @@ class TestRfcMatching:
         assert allowed.count() == 1 and blocked.count() == 0
 
     def test_run_round_dispatches_rfc_rules(self, spark, tmp_path):
-        """E2E: an RFC rule table (regex column) routes through full
-        matching inside run_crawl — the Allow carve-out is fetched, the
-        rest of /private/ lands as robots-error checks."""
-        from pyspark.sql import functions as F
-
-        from hydra_spark.crawl.robots import rfc_rules_from_robots_pages
-
+        """E2E: the rule table routes through the RFC matcher inside
+        run_crawl — the Allow carve-out is fetched, every other path
+        lands as a robots-error check."""
         pages = generate_pages(spark, 800, n_hosts=6).cache()
         frontier = generate_frontier(spark, pages)
         domains = frontier.selectExpr(
