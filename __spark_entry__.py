@@ -700,7 +700,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # through as raw digits breaks the hash match
         import datetime as _dt
 
-        from hydra_spark.analysis.excel import analyse_excel_batch
+        from hydra_spark.analysis.ingest import analyse_csv_batch
         from hydra_spark.analysis.xlsx import xlsx_bytes
 
         payloads = [
@@ -720,7 +720,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             payloads,
             "url string, resource_id string, dataset_id string, html binary, parsing_table string",
         )
-        parsed = analyse_excel_batch(df).where(F.col("row_json").isNotNull())
+        parsed = analyse_csv_batch(df).where(F.col("row_json").isNotNull())
         return parsed.select(
             "url", "__id",
             F.get_json_object("row_json", "$.code").cast("int").alias("code"),
@@ -734,7 +734,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (hydra_spark/analysis/xls.py) — the oracle replays the grammar;
         # odd workbooks are BIFF5 (Excel 5.0/95: 'Book' stream, inline
         # codepage strings, no SST), so both codec eras are driver-gated
-        from hydra_spark.analysis.excel import analyse_excel_batch
+        from hydra_spark.analysis.ingest import analyse_csv_batch
         from hydra_spark.analysis.xls import xls_bytes
 
         payloads = [
@@ -753,7 +753,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             payloads,
             "url string, resource_id string, dataset_id string, html binary, parsing_table string",
         )
-        parsed = analyse_excel_batch(df).where(F.col("row_json").isNotNull())
+        parsed = analyse_csv_batch(df).where(F.col("row_json").isNotNull())
         return parsed.select(
             "url", "__id",
             F.get_json_object("row_json", "$.code").cast("int").alias("code"),

@@ -2,14 +2,15 @@
 
 BASELINE.json's per-row invariant is "byte-identical extracted text per
 url versus the reference": the `pages.text` column carries the
-reference-extracted text, and this stage must reproduce it from the raw
-`html` bytes. Extraction runs as ONE Arrow-batched pandas UDF over the
-fetched batch (vectorized pandas string ops — no per-row Python loop):
-
-- HTML documents → the <p>…</p> body text (the synthetic corpus embeds
-  exactly one paragraph; a production extractor would plug trafilatura/
-  boilerplate-removal here — same UDF shape).
-- anything else (CSV, plain text) → the decoded bytes verbatim.
+reference-extracted text, and the crawl round must reproduce it from
+the raw `html` bytes. `ingest.route_python_boundary` puts each row on
+one of two lanes: `extract_text_jvm` (valid UTF-8 text and parquet; the
+bytes never leave the JVM) or `ingest._extract_text_py` (gzip, xlsx/xls,
+everything else), which is also the JVM lane's oracle. Both turn HTML
+documents into the <p>…</p> body text (the synthetic corpus embeds
+exactly one paragraph) and pass anything else (CSV, plain text) through
+decoded. `html_to_text` is a different operator: full-page,
+block-structured HTML → text.
 """
 
 from __future__ import annotations
@@ -19,53 +20,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def _maybe_gunzip(b) -> bytes | None:
-    if b is None:
-        return None
-    b = bytes(b)
-    if b[:2] == b"\x1f\x8b":
-        import gzip
-
-        try:
-            return gzip.decompress(b)
-        except OSError:
-            return b
-    return b
-
-
-def _decode_or_sheet(b: bytes) -> str:
-    """utf-8 decode, except Excel payloads (xlsx zip / legacy .xls OLE2)
-    decode to their CSV-shaped sheet text — keep in lockstep with
-    ingest._extract_text_py."""
-    if b[:4] == b"PK\x03\x04" or b[:8] == b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1":
-        from hydra_spark.analysis.ingest import _excel_rows
-
-        try:
-            return "\n".join(",".join(r) for r in _excel_rows(b))
-        except Exception:
-            return ""
-    return b.decode("utf-8", "replace")
-
-
-@F.pandas_udf(T.StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    s = html.map(lambda b: _decode_or_sheet(_maybe_gunzip(b)) if b is not None else None)
-    s = pd.Series(s, dtype="object")
-    mask = s.notna()
-    out = s.copy()
-    is_html = s.where(mask).str.startswith("<html").fillna(False)
-    if is_html.any():
-        body = s.where(is_html).str.extract(r"<p>(.*)</p>", expand=False)
-        fallback = (
-            s.where(is_html)
-            .str.replace(r"<[^>]+>", " ", regex=True)
-            .str.replace(r"\s+", " ", regex=True)
-            .str.strip()
-        )
-        out = out.mask(is_html, body.fillna(fallback))
-    return out
 
 
 def extract_text_jvm(html_col: Column) -> Column:

@@ -32,14 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from hydra_spark.analysis.casting import smart_cast_cell  # noqa: F401 (back-compat re-export)
-from hydra_spark.analysis.inspect import (
-    ParsingError,
-    _inspect_csv_full,
-    _validate_inspection_full,
-    inspect_csv,  # noqa: F401 (back-compat re-export)
-    validate_inspection,  # noqa: F401 (back-compat re-export)
-)
+from hydra_spark.analysis.inspect import ParsingError, _inspect_csv_full, _validate_inspection_full
+from hydra_spark.analysis.xls import XLS_MAGIC, xls_rows
+from hydra_spark.analysis.xlsx import XLSX_MAGIC, xlsx_rows
 from hydra_spark.schemas import PYTHON_TYPE_TO_SPARK, db_col_name
 
 ROWS_SCHEMA = T.StructType(
@@ -55,19 +50,16 @@ ROWS_SCHEMA = T.StructType(
     ]
 )
 
-_OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 
-
-def _excel_rows(data: bytes) -> list[list[str]]:
-    """First-sheet rows for either Excel container (magic-dispatched);
-    local import: analysis.excel imports from this module."""
-    if data[:8] == _OLE2_MAGIC:
-        from hydra_spark.analysis.xls import xls_rows
-
-        return xls_rows(data)
-    from hydra_spark.analysis.xlsx import xlsx_rows
-
-    return xlsx_rows(data)
+def _excel_rows(data: bytes, sheet_name: str | None = None) -> list[list[str]]:
+    """The one Excel decoder: OLE2 → legacy .xls (BIFF5/8), anything
+    else → xlsx. ``sheet_name=None`` reads the first sheet in workbook
+    order, like the reference's default inspection (utils/reader.py:
+    31-67 opens ``wb[sheet_name]`` with openpyxl/xlrd; the stdlib
+    codecs here stand in for both)."""
+    if data[:8] == XLS_MAGIC:
+        return xls_rows(data, sheet_name)
+    return xlsx_rows(data, sheet_name)
 
 
 # combined per-round output: extracted text rows (kind='text') + parsed
@@ -132,7 +124,8 @@ def _row_json(prefixes: list[str], vals: list) -> "str | None":
 
 
 def _analyse_one(
-    url: str, rid: str, did: str, data: bytes, table: str, prev_inspection: dict | None = None
+    url: str, rid: str, did: str, data: bytes, table: str,
+    prev_inspection: dict | None = None, sheet_name: str | None = None,
 ) -> list[tuple]:
     data = _gunzip_if_needed(data)
     if data[:4] == b"PAR1":
@@ -140,16 +133,16 @@ def _analyse_one(
         # output shape as the CSV path (data_formats/parquet/
         # __init__.py:35-62 routes Parquet to inspect + to_db)
         return _parquet_rows(url, rid, did, data, table)
-    if data[:4] == b"PK\x03\x04" or data[:8] == _OLE2_MAGIC:
-        # Excel (xlsx zip / legacy .xls OLE2): decode first sheet → CSV
-        # text, then the shared inspect/cast pipeline (typing semantics
-        # identical to the CSV path — utils/reader.py routes both
-        # through casting)
+    if data[:4] == XLSX_MAGIC or data[:8] == XLS_MAGIC:
+        # Excel (xlsx zip / legacy .xls OLE2): decode the selected sheet
+        # (first by default) → CSV text, then the shared inspect/cast
+        # pipeline (typing semantics identical to the CSV path —
+        # utils/reader.py routes both through casting)
         import csv as _csv
         import io as _io
 
         try:
-            rows = _excel_rows(data)
+            rows = _excel_rows(data, sheet_name)
         except Exception as e:
             return [(table, rid, did, url, None, None, None, f"excel:{e}")]
         buf = _io.StringIO()
@@ -271,14 +264,15 @@ def _gunzip_if_needed(data: bytes) -> bytes:
 
 
 def _extract_text_py(data: bytes) -> str:
-    """Single-document twin of analysis/extract.py's vectorized UDF —
-    MUST stay byte-identical with it (shared invariant)."""
+    """The python extraction lane, and the oracle of its JVM twin
+    (analysis/extract.py ``extract_text_jvm``) — the two MUST stay
+    byte-identical on the payloads the JVM lane takes."""
     import re
 
     data = _gunzip_if_needed(data)
     if data[:4] == b"PAR1":
         return ""  # typed rows carry parquet content; no prose to extract
-    if data[:4] == b"PK\x03\x04" or data[:8] == _OLE2_MAGIC:
+    if data[:4] == XLSX_MAGIC or data[:8] == XLS_MAGIC:
         try:
             return "\n".join(",".join(r) for r in _excel_rows(data))
         except Exception:
@@ -391,20 +385,27 @@ def process_fetched(df: DataFrame) -> DataFrame:
 
 
 def analyse_csv_batch(df: DataFrame) -> DataFrame:
-    """df: (url, resource_id, dataset_id, html binary, [parsing_table]).
-    → ROWS_SCHEMA rows, one per parsed data line (or one error row)."""
+    """df: (url, resource_id, dataset_id, html binary, [parsing_table],
+    [sheet_name]) → ROWS_SCHEMA rows, one per parsed data line (or one
+    error row). Payloads are magic-dispatched like the crawl round's:
+    gzip is unpacked, parquet/xlsx/xls are decoded, anything else is
+    CSV. ``sheet_name`` picks an Excel sheet per resource, like the
+    reference's inspection-driven ``wb[sheet_name]`` (utils/reader.py:
+    36,41); absent or NULL reads the first sheet."""
     if "parsing_table" not in df.columns:
         df = df.withColumn("parsing_table", F.md5("url"))
-    cols = ["url", "resource_id", "dataset_id", "html", "parsing_table"]
+    if "sheet_name" not in df.columns:
+        df = df.withColumn("sheet_name", F.lit(None).cast("string"))
+    cols = ["url", "resource_id", "dataset_id", "html", "parsing_table", "sheet_name"]
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         names = [f.name for f in ROWS_SCHEMA.fields]
         for pdf in batches:
             rows: list[tuple] = []
-            for url, rid, did, html, table in pdf[cols].itertuples(index=False):
+            for url, rid, did, html, table, sheet in pdf[cols].itertuples(index=False):
                 if html is None:
                     continue
-                rows.extend(_analyse_one(url, rid, did, bytes(html), table))
+                rows.extend(_analyse_one(url, rid, did, bytes(html), table, sheet_name=sheet))
             yield pd.DataFrame(rows, columns=names)
 
     return df.select(*cols).mapInPandas(gen, schema=ROWS_SCHEMA)

@@ -391,8 +391,9 @@ def write_wet(
 ) -> DataFrame:
     """WET SINK — Common Crawl's extracted-text product: WARC
     'conversion' records (Content-Type text/plain, UTF-8 text payload).
-    fetch → extract_text → `write_wet` IS the WET-generation pipeline;
-    same segment/naming/manifest contract as `write_warc`."""
+    fetch → text extraction (the round's `texts` output) → `write_wet` IS
+    the WET-generation pipeline; same segment/naming/manifest contract
+    as `write_warc`."""
     import os
 
     import pandas as pd

@@ -22,6 +22,13 @@ from hydra_spark.storage import StateStore
 TS_FMT = "%Y-%m-%d %H:%M:%S"
 
 
+def round_now(start_now: str, round_id: int, round_interval_s: float) -> str:
+    """The simulated clock: round ``round_id`` runs at start + (round_id
+    − 1) × interval."""
+    start = datetime.strptime(start_now, TS_FMT)
+    return (start + timedelta(seconds=(round_id - 1) * round_interval_s)).strftime(TS_FMT)
+
+
 def init_state(store: StateStore, frontier: DataFrame) -> None:
     """Seed the frontier (catalog-load analog, cli/catalog.py:20-98)."""
     store.frontier.commit(frontier, round_id=0)
@@ -50,7 +57,6 @@ def run_crawl(
     local (cfg is immutable); a deployment that wants them durable
     persists the miner's report itself.
     """
-    start = datetime.strptime(start_now, TS_FMT)
     # crash recovery: a killed round may have appended batches (checks,
     # outputs, frontier deltas, ...) without reaching commit_round —
     # drop those orphans so the re-run doesn't duplicate its rows
@@ -67,6 +73,6 @@ def run_crawl(
                 max_patterns=cfg.trap_max_patterns,
             )
             cfg = cfg.with_(excluded_patterns=base_patterns + tuple(pats))
-        now = (start + timedelta(seconds=(r - 1) * round_interval_s)).strftime(TS_FMT)
+        now = round_now(start_now, r, round_interval_s)
         out.append(run_round(spark, store, pages, cfg, round_id=r, now=now, robots_rules=robots_rules, exceptions=exceptions, force_analysis=force_analysis, crawl_delays=crawl_delays))
     return out

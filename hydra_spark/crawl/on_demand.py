@@ -17,20 +17,12 @@ Reference routes/checks.py:59-96: auth → `Resource.get` →
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
-
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from hydra_spark.config import DEFAULT, HydraConfig
-from hydra_spark.crawl.loop import TS_FMT, run_crawl
+from hydra_spark.crawl.loop import round_now, run_crawl
 from hydra_spark.storage import StateStore
-
-
-def _next_round_now(store: StateStore, start_now: str, round_interval_s: float) -> str:
-    r = store.last_round() + 1
-    start = datetime.strptime(start_now, TS_FMT)
-    return (start + timedelta(seconds=(r - 1) * round_interval_s)).strftime(TS_FMT)
 
 
 def request_check(
@@ -41,7 +33,7 @@ def request_check(
     round_interval_s: float = 60.0,
 ) -> None:
     """Flag `resource_id` for a priority check in the next round."""
-    upd_at = _next_round_now(store, start_now, round_interval_s)
+    upd_at = round_now(start_now, store.last_round() + 1, round_interval_s)
     delta = spark.createDataFrame(
         [(resource_id, None, "prioritize")],
         "_urid string, _new_last_check bigint, _upd string",

@@ -38,6 +38,25 @@ def _read_manifest(path: str) -> dict | None:
         return json.load(f)
 
 
+def _next_batch_id(m: dict) -> int:
+    """max(id)+1 over live AND superseded batches, NOT len+1: after a
+    rewrite()/clear compaction the live list shrinks (or empties) —
+    reusing an id would overwrite a superseded dir still held by open
+    readers, and collide with FrontierTable's folded-insert id guard (a
+    new batch wearing a folded id is silently skipped)."""
+    return max((b["id"] for b in m["batches"] + m.get("superseded", [])), default=0) + 1
+
+
+def _supersede_batches(m: dict, now: float) -> None:
+    """Move every live batch of an AppendLog manifest to its superseded
+    list: the dirs stay on disk for open readers, stamped with the
+    supersede time so gc() can age-gate on it."""
+    m["superseded"] = m.get("superseded", []) + [
+        {**b, "superseded_ts": now} for b in m["batches"]
+    ]
+    m["batches"] = []
+
+
 class SnapshotTable:
     """A table whose every commit is a full immutable snapshot.
 
@@ -144,21 +163,7 @@ class AppendLog:
 
     def append(self, df: DataFrame, round_id: int | None = None, meta: dict | None = None) -> int:
         m = self.manifest()
-        # max(id)+1 over live AND superseded batches, NOT len+1: after a
-        # rewrite()/clear compaction the live list shrinks (or empties) —
-        # reusing an id would overwrite a superseded dir still held by
-        # open readers, and collide with FrontierTable's folded-insert
-        # id guard (a new batch wearing a folded id is silently skipped)
-        bid = (
-            max(
-                (
-                    b["id"]
-                    for b in (m["batches"] + m.get("superseded", []))
-                ),
-                default=0,
-            )
-            + 1
-        )
+        bid = _next_batch_id(m)
         bdir = os.path.join(self.dir, f"batch-{bid:06d}")
         df.write.mode("overwrite").parquet(bdir)
         m["batches"].append(
@@ -184,18 +189,11 @@ class AppendLog:
         in; the old dirs are left on disk for still-open readers and can
         be garbage-collected by a later maintenance pass."""
         m = self.manifest()
-        bid = (
-            max((b["id"] for b in (m["batches"] + m.get("superseded", []))), default=0)
-            + 1
-        )
+        bid = _next_batch_id(m)
         bdir = os.path.join(self.dir, f"batch-{bid:06d}")
         df.write.mode("overwrite").parquet(bdir)  # BEFORE touching the manifest
         now = time.time()
-        # superseded dirs stay on disk for open readers, tracked with the
-        # supersede timestamp so gc() can age-gate on it
-        m["superseded"] = m.get("superseded", []) + [
-            {**b, "superseded_ts": now} for b in m["batches"]
-        ]
+        _supersede_batches(m, now)
         m["batches"] = [{"id": bid, "round": None, "ts": now, "path": bdir, "meta": meta or {}}]
         _write_manifest(self.manifest_path, m)
         return bid
@@ -288,21 +286,14 @@ class FrontierTable:
         return sid
 
     def _clear_deltas(self) -> None:
-        """Empty the delta manifest, moving its batch dirs to the
-        superseded list (left on disk for open readers; gc() collects)."""
-        m = self.deltas.manifest()
+        """Empty the delta and insert manifests, moving their batch dirs
+        to the superseded lists (left on disk for open readers; gc()
+        collects)."""
         now = time.time()
-        m["superseded"] = m.get("superseded", []) + [
-            {**b, "superseded_ts": now} for b in m["batches"]
-        ]
-        m["batches"] = []
-        _write_manifest(self.deltas.manifest_path, m)
-        mi = self.inserts.manifest()
-        mi["superseded"] = mi.get("superseded", []) + [
-            {**b, "superseded_ts": now} for b in mi["batches"]
-        ]
-        mi["batches"] = []
-        _write_manifest(self.inserts.manifest_path, mi)
+        for log in (self.deltas, self.inserts):
+            m = log.manifest()
+            _supersede_batches(m, now)
+            _write_manifest(log.manifest_path, m)
 
     def manifest(self) -> dict:
         return self.base.manifest()

@@ -6,7 +6,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from hydra_spark.analysis.excel import analyse_excel_batch
+from hydra_spark.analysis.ingest import analyse_csv_batch
 from hydra_spark.analysis.ogc import inspect_ogc_batch, synthetic_capabilities
 from hydra_spark.config import DEFAULT
 from hydra_spark.crawl.loop import init_state, run_crawl
@@ -98,7 +98,7 @@ def test_excel_malformed_zip_reports_error(spark):
         [("http://x/f.xlsx", "r1", "d1", bytearray(b"PK\x03\x04fake"), "tbl")],
         "url string, resource_id string, dataset_id string, html binary, parsing_table string",
     )
-    rows = analyse_excel_batch(df).collect()
+    rows = analyse_csv_batch(df).collect()
     assert len(rows) == 1
     assert rows[0]["parsing_error"].startswith("excel:")
 

@@ -82,3 +82,23 @@ def test_prioritize_delta_survives_merge_and_next_check_clears_it(spark, warm_st
 def test_latest_check_for_missing_resource(spark, tmp_path):
     store = StateStore(str(tmp_path / "empty"))
     assert latest_check_for(spark, store, "nope") is None
+
+
+def test_request_check_stamps_the_next_rounds_clock(spark, tmp_path, monkeypatch):
+    """The prioritize delta carries the `now` that run_crawl gives the
+    next round, under a non-default start and round interval."""
+    import hydra_spark.crawl.loop as loop
+
+    store = StateStore(str(tmp_path / "store"))
+    store.commit_round(2)  # two rounds done: the next one is round 3
+    clock = dict(start_now="2025-03-01 06:00:00", round_interval_s=5400.0)
+    request_check(spark, store, "r1", **clock)
+    upd_at = (
+        store.frontier.deltas.read(spark)
+        .select(F.date_format("_upd_at", "yyyy-MM-dd HH:mm:ss"))
+        .first()[0]
+    )
+    nows = []
+    monkeypatch.setattr(loop, "run_round", lambda *a, **k: nows.append(k["now"]) or {})
+    run_crawl(spark, store, None, DEFAULT, rounds=1, **clock)
+    assert nows == ["2025-03-01 09:00:00"] and upd_at == nows[0]

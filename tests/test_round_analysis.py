@@ -137,15 +137,15 @@ def test_size_cap_blocks_analysis(spark, tmp_path):
 
 
 def test_extraction_twins_agree(spark):
-    """THREE extraction implementations must stay in lockstep: the
-    python single-doc twin, the Arrow-batched pandas UDF, and the
-    whole-stage-codegen JVM expression (plain/html payloads only — gzip
-    and xlsx are routed to python by design)."""
+    """TWO extraction implementations must stay in lockstep: the python
+    lane (the oracle) and the whole-stage-codegen JVM expression
+    (plain/html payloads only — gzip and xlsx are routed to python by
+    design, where the oracle unpacks them)."""
     import gzip as _gzip
 
     from pyspark.sql import functions as F
 
-    from hydra_spark.analysis.extract import extract_text, extract_text_jvm
+    from hydra_spark.analysis.extract import extract_text_jvm
     from hydra_spark.analysis.ingest import _extract_text_py
     from hydra_spark.analysis.xlsx import xlsx_bytes
 
@@ -163,23 +163,17 @@ def test_extraction_twins_agree(spark):
         xlsx_bytes([["h1", "h2"], ["1", "x"]]),
     ]
     df = spark.createDataFrame(
-        [(i, bytearray(b)) for i, b in enumerate(plain_cases + python_only_cases)],
-        "i int, html binary",
+        [(i, bytearray(b)) for i, b in enumerate(plain_cases)], "i int, html binary"
     )
     out = {
-        r["i"]: (r["pandas_udf"], r["jvm"])
-        for r in df.select(
-            "i",
-            extract_text(F.col("html")).alias("pandas_udf"),
-            extract_text_jvm(F.col("html")).alias("jvm"),
-        ).collect()
+        r["i"]: r["jvm"]
+        for r in df.select("i", extract_text_jvm(F.col("html")).alias("jvm")).collect()
     }
     for i, b in enumerate(plain_cases):
         expected = _extract_text_py(bytes(b))
-        assert out[i][0] == expected, (i, "pandas", out[i][0], expected)
-        assert out[i][1] == expected, (i, "jvm", out[i][1], expected)
-    for j, b in enumerate(python_only_cases, start=len(plain_cases)):
-        assert out[j][0] == _extract_text_py(bytes(b))  # pandas handles gzip/xlsx too
+        assert out[i] == expected, (i, "jvm", out[i], expected)
+    # the python-only lane: gzip unpacks, xlsx reads as its sheet's CSV text
+    assert [_extract_text_py(b) for b in python_only_cases] == ["a,b,c\n1,2,3", "h1,h2\n1,x"]
 
 
 class TestHtmlToText:

@@ -6,7 +6,6 @@ pipeline as CSV — utils/reader.py:31-67)."""
 
 from pyspark.sql import functions as F
 
-from hydra_spark.analysis.excel import analyse_excel_batch
 from hydra_spark.analysis.ingest import analyse_csv_batch
 from hydra_spark.analysis.xlsx import XLSX_MIME, xlsx_bytes, xlsx_rows
 from hydra_spark.config import DEFAULT
@@ -75,7 +74,7 @@ def test_xlsx_ingest_matches_csv_path(spark):
         [("http://x/f.xlsx", "r1", "d1", bytearray(CSV.encode()), "tbl")],
         "url string, resource_id string, dataset_id string, html binary, parsing_table string",
     )
-    got_x = {r["__id"]: r["row_json"] for r in analyse_excel_batch(xdf).collect()}
+    got_x = {r["__id"]: r["row_json"] for r in analyse_csv_batch(xdf).collect()}
     got_c = {r["__id"]: r["row_json"] for r in analyse_csv_batch(cdf).collect()}
     assert got_x == got_c and len(got_x) == 3
     assert '"number": 3.5' in got_x[3] and '"label": "lyon"' in got_x[3]
@@ -203,7 +202,7 @@ def test_xls_ingest_matches_csv_path(spark):
         [("http://x/f.xls", "r1", "d1", bytearray(CSV.encode()), "tbl")],
         "url string, resource_id string, dataset_id string, html binary, parsing_table string",
     )
-    got_x = {r["__id"]: r["row_json"] for r in analyse_excel_batch(xdf).collect()}
+    got_x = {r["__id"]: r["row_json"] for r in analyse_csv_batch(xdf).collect()}
     got_c = {r["__id"]: r["row_json"] for r in analyse_csv_batch(cdf).collect()}
     assert got_x == got_c and len(got_x) == 3
     assert '"number": 3.5' in got_x[3] and '"label": "lyon"' in got_x[3]
@@ -231,7 +230,7 @@ def test_excel_sheet_name_column_selects_per_resource(spark):
         "url string, resource_id string, dataset_id string, html binary, "
         "parsing_table string, sheet_name string",
     )
-    got = analyse_excel_batch(df).collect()
+    got = analyse_csv_batch(df).collect()
     by_table = {}
     for r in got:
         by_table.setdefault(r["parsing_table"], []).append(r["row_json"])
@@ -357,7 +356,7 @@ def test_xlsx_date_column_types_as_datetime(spark):
         [("http://x/d.xlsx", "r1", "d1", bytearray(csv_text.encode()), "tbl")],
         "url string, resource_id string, dataset_id string, html binary, parsing_table string",
     )
-    got_x = {r["__id"]: r["row_json"] for r in analyse_excel_batch(xdf).collect()}
+    got_x = {r["__id"]: r["row_json"] for r in analyse_csv_batch(xdf).collect()}
     got_c = {r["__id"]: r["row_json"] for r in analyse_csv_batch(cdf).collect()}
     assert got_x == got_c and len(got_x) == 2
     assert "2023-03-15" in got_x[1]
@@ -401,7 +400,7 @@ def test_xls_biff5_ingest_matches_csv_path(spark):
         [("http://x/old.xls", "r1", "d1", bytearray(CSV.encode()), "tbl")],
         "url string, resource_id string, dataset_id string, html binary, parsing_table string",
     )
-    got_x = {r["__id"]: r["row_json"] for r in analyse_excel_batch(xdf).collect()}
+    got_x = {r["__id"]: r["row_json"] for r in analyse_csv_batch(xdf).collect()}
     got_c = {r["__id"]: r["row_json"] for r in analyse_csv_batch(cdf).collect()}
     assert got_x == got_c and len(got_x) == 3
 
