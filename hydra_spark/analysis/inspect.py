@@ -224,45 +224,15 @@ def _cast_matrix(header: list[str], cols: dict, body: list[list[str]]) -> list[l
 
 
 def _profile_from_casted(header: list[str], cols: dict, casted: list[list]) -> dict:
-    """`_profile` computed from the shared cast matrix — identical
-    output (same smart_cast semantics, failures already NULLed)."""
+    """min/max/mean/std of each int/float column, from the shared cast
+    matrix (smart_cast semantics, failures already NULLed); an inf makes
+    max, mean and std NULL."""
     profile = {}
     for j, name in enumerate(header):
         t = cols[name]["python_type"]
         if t not in ("int", "float"):
             continue
         vals = [float(row[j]) for row in casted if j < len(row) and row[j] is not None]
-        if not vals:
-            profile[name] = {"min": None, "max": None, "mean": None, "std": None}
-            continue
-        has_inf = any(math.isinf(v) for v in vals)
-        finite = [v for v in vals if math.isfinite(v)]
-        mn = min(finite) if finite else None
-        if has_inf:
-            profile[name] = {"min": mn, "max": None, "mean": None, "std": None}
-        else:
-            n = len(vals)
-            mean = sum(vals) / n
-            std = (sum((v - mean) ** 2 for v in vals) / (n - 1)) ** 0.5 if n > 1 else None
-            profile[name] = {"min": mn, "max": max(vals), "mean": mean, "std": std}
-    return profile
-
-
-def _profile(header: list[str], cols: dict, body: list[list[str]]) -> dict:
-    profile = {}
-    for j, name in enumerate(header):
-        t = cols[name]["python_type"]
-        if t not in ("int", "float"):
-            continue
-        vals = []
-        for r in body:
-            v = r[j] if j < len(r) else None
-            try:
-                c = smart_cast_cell(t, v)
-            except ValueError:
-                c = None
-            if c is not None:
-                vals.append(float(c))
         if not vals:
             profile[name] = {"min": None, "max": None, "mean": None, "std": None}
             continue

@@ -8,6 +8,12 @@ read CSV → project/clean → MERGE INTO frontier as one full-outer join
 on resource_id (update metadata of known resources, insert new ones,
 soft-delete gone ones) → OR the URLs new to the frontier into the
 URL-seen shards.
+
+`upsert_catalog` is the one merge: the first load (into an empty
+frontier), every refresh, and the single-row `insert_resource` /
+`insert_url` all go through it, so every URL they admit reaches the
+seen shards. `as_frontier_rows` is the one builder of new frontier
+rows; link discovery builds its rows with it too.
 """
 
 from __future__ import annotations
@@ -20,11 +26,6 @@ from hydra_spark.functions.urls import host_bucket
 from hydra_spark.schemas import FRONTIER_SCHEMA
 from hydra_spark.seen import BloomSeenSet
 from hydra_spark.storage import StateStore
-
-CATALOG_KEEP = [
-    "dataset_id", "resource_id", "url", "type", "format", "harvest_modified_at", "title",
-]
-
 
 def read_catalog_csv(spark: SparkSession, path: str) -> DataFrame:
     """data.gouv catalog export: `;`-separated with header
@@ -48,22 +49,24 @@ def read_catalog_csv(spark: SparkSession, path: str) -> DataFrame:
 
 
 def as_frontier_rows(catalog: DataFrame, cfg: HydraConfig = DEFAULT) -> DataFrame:
-    out = catalog
-    for f in FRONTIER_SCHEMA.fields:
-        if f.name not in out.columns:
-            default = {
-                "deleted": F.lit(False),
-                "priority": F.lit(False),
-                "host_bucket": host_bucket("url", cfg.frontier_buckets),
-            }.get(f.name, F.lit(None).cast(f.dataType))
-            out = out.withColumn(f.name, default)
-    return out.select(*FRONTIER_SCHEMA.fieldNames()).dropDuplicates(["resource_id"])
-
-
-def _moved_bucket(new_url, old_url, new_bucket, kept):
-    """The bucket hashes the URL's host, and the claim's per-domain cap
-    counts within one bucket: a moved URL takes its new one."""
-    return F.when(new_url != old_url, new_bucket).otherwise(kept)
+    """One row per resource_id, projected onto FRONTIER_SCHEMA in one
+    select: cast the columns ``catalog`` has, default the ones it lacks
+    (not deleted, not priority, host_bucket from the url, NULL
+    otherwise). The dedup runs first, so only the input's columns go
+    through its shuffle."""
+    have = set(catalog.columns)
+    defaults = {
+        "deleted": F.lit(False),
+        "priority": F.lit(False),
+        "host_bucket": host_bucket("url", cfg.frontier_buckets),
+    }
+    return catalog.dropDuplicates(["resource_id"]).select(
+        *[
+            (F.col(f.name) if f.name in have else defaults.get(f.name, F.lit(None)))
+            .cast(f.dataType).alias(f.name)
+            for f in FRONTIER_SCHEMA.fields
+        ]
+    )
 
 
 def upsert_catalog(
@@ -75,35 +78,46 @@ def upsert_catalog(
 ) -> dict:
     """MERGE the incoming catalog into the frontier: ONE full-outer join
     on resource_id, the MERGE key (cli/catalog.py:61-76 INSERT ... ON
-    CONFLICT (resource_id) DO UPDATE).
+    CONFLICT (resource_id) DO UPDATE). An empty store merges into an
+    empty frontier, so the first load is the same join.
 
     - matched resource_id  → refresh metadata (a NULL incoming value
       keeps the stored one; a moved URL also moves its host_bucket),
       undelete
     - new resource_id      → insert the row as `as_frontier_rows` builds it
     - missing from incoming→ soft-delete (UPDATE catalog SET deleted,
-      cli/catalog.py:49-56) when mark_missing_deleted
+      cli/catalog.py:49-56) when mark_missing_deleted, else kept as is
 
     The seen shards then learn the incoming URLs the frontier did not
-    hold: the inserted resources' URLs and the moved URLs of matched ones.
+    hold: the inserted resources' URLs and the moved URLs of matched
+    ones. A store without seen shards gets them built from the result.
     """
-    frontier = store.frontier.read(spark)
+    if store.frontier.exists():
+        frontier = store.frontier.read(spark)
+    else:
+        frontier = spark.createDataFrame([], FRONTIER_SCHEMA)
     inc = as_frontier_rows(incoming, cfg)
 
-    refreshed = ("dataset_id", "url", "harvest_modified_at", "format", "title")
+    refreshed = ("dataset_id", "url", "harvest_modified_at", "type", "format", "title")
     # frontier keys are never NULL: a NULL one marks an incoming-only row
     in_fr = F.col("resource_id").isNotNull()
+    listed = F.col("_n_resource_id").isNotNull()
 
     def merged_col(c: str):
         if c == "resource_id":
             return F.coalesce(F.col(c), F.col("_n_resource_id"))
         if c in refreshed:
             return F.coalesce(F.col(f"_n_{c}"), F.col(c))
-        if c == "deleted" and mark_missing_deleted:
-            return F.when(in_fr, F.col("_n_resource_id").isNull()).otherwise(F.col("_n_deleted"))
+        if c == "deleted":
+            return F.when(listed, F.lit(False)).otherwise(
+                F.lit(True) if mark_missing_deleted else F.col(c)
+            )
         kept = F.when(in_fr, F.col(c)).otherwise(F.col(f"_n_{c}"))
         if c == "host_bucket":
-            return _moved_bucket(F.col("_n_url"), F.col("url"), F.col("_n_host_bucket"), kept)
+            # the bucket hashes the URL's host, and the claim's
+            # per-domain cap counts within one bucket: a moved URL
+            # takes its new one
+            return F.when(F.col("_n_url") != F.col("url"), F.col("_n_host_bucket")).otherwise(kept)
         return kept
 
     j = frontier.join(
@@ -143,10 +157,11 @@ def insert_resource(
     here metadata comes from the caller (no network in the engine).
     Returns {'action': 'insert'|'update', 'snapshot': id}.
 
-    Scale note: this is a debug/ops utility — ONE broadcast join against
-    the frontier and one merge commit; the matched row is undeleted and
-    its metadata refreshed, exactly the reference's ON CONFLICT UPDATE
-    (incl. `deleted = FALSE`)."""
+    The row goes through `upsert_catalog` with mark_missing_deleted off:
+    a matched row is undeleted and its metadata refreshed, exactly the
+    reference's ON CONFLICT UPDATE (incl. `deleted = FALSE`), and the
+    seen shards learn the URL. Scale note: this is a debug/ops utility;
+    like a catalog load, it shuffles and rewrites the whole frontier."""
     row = spark.createDataFrame(
         [(dataset_id, resource_id, url, type, format, title)],
         "dataset_id string, resource_id string, url string, "
@@ -155,49 +170,11 @@ def insert_resource(
         "harvest_modified_at",
         F.to_timestamp(F.lit(harvest_modified_at)) if harvest_modified_at else F.lit(None).cast("timestamp"),
     )
-    if not store.frontier.exists():
-        sid = store.frontier.commit(as_frontier_rows(row, cfg), meta={"op": "insert_resource"})
-        return {"action": "insert", "snapshot": sid}
-
-    frontier = store.frontier.read(spark)
-    existed = frontier.where(F.col("resource_id") == resource_id).limit(1).count() > 0
-    if existed:
-        upd = F.broadcast(
-            row.select(
-                F.col("resource_id").alias("_rid"),
-                F.col("dataset_id").alias("_dsid"),
-                F.col("url").alias("_url"),
-                F.col("type").alias("_type"),
-                F.col("format").alias("_fmt"),
-                F.col("title").alias("_title"),
-                F.col("harvest_modified_at").alias("_hma"),
-            )
-        )
-        merged = (
-            frontier.join(upd, frontier.resource_id == upd._rid, "left")
-            .withColumn("dataset_id", F.coalesce("_dsid", "dataset_id"))
-            .withColumn(
-                "host_bucket",
-                _moved_bucket(
-                    F.col("_url"), F.col("url"),
-                    host_bucket("_url", cfg.frontier_buckets), F.col("host_bucket"),
-                ),
-            )
-            .withColumn("url", F.coalesce("_url", "url"))
-            .withColumn("type", F.coalesce("_type", "type"))
-            .withColumn("format", F.coalesce("_fmt", "format"))
-            .withColumn("title", F.coalesce("_title", "title"))
-            .withColumn("harvest_modified_at", F.coalesce("_hma", "harvest_modified_at"))
-            .withColumn(
-                "deleted",
-                F.when(F.col("_rid").isNotNull(), F.lit(False)).otherwise(F.col("deleted")),
-            )
-            .drop("_rid", "_dsid", "_url", "_type", "_fmt", "_title", "_hma")
-        )
-    else:
-        merged = frontier.unionByName(as_frontier_rows(row, cfg))
-    sid = store.frontier.commit(merged, meta={"op": "insert_resource"})
-    return {"action": "update" if existed else "insert", "snapshot": sid}
+    existed = store.frontier.exists() and (
+        store.frontier.read(spark).where(F.col("resource_id") == resource_id).limit(1).count() > 0
+    )
+    res = upsert_catalog(spark, store, row, cfg, mark_missing_deleted=False)
+    return {"action": "update" if existed else "insert", **res}
 
 
 def insert_url(

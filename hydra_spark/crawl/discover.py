@@ -27,7 +27,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hydra_spark.functions.urls import canonicalize_url, host_bucket
+from hydra_spark.catalog import as_frontier_rows
+from hydra_spark.config import DEFAULT
+from hydra_spark.functions.urls import canonicalize_url, resource_id_of
 
 __all__ = [
     "extract_links",
@@ -124,44 +126,19 @@ def discover_frontier(
     host-bucketed for the salted claim path. ONE left_anti join on
     resource_id — only the (already per-page-distinct) links shuffle.
     Append the result to the frontier store to enqueue."""
-    from hydra_spark.config import DEFAULT
-
-    cfg = cfg or DEFAULT
-    h = F.md5(F.col(link_col))
-    rid = F.concat_ws(
-        "-",
-        F.substring(h, 1, 8), F.substring(h, 9, 4), F.substring(h, 13, 4),
-        F.substring(h, 17, 4), F.substring(h, 21, 12),
-    )
-    # dedup keyed on the DERIVED resource_id, not the url: the groupBy
+    # dedup keyed on the DERIVED resource_id, not the url: the dedup's
     # output is then already hash-partitioned on the anti-join key, so
     # the candidate side shuffles ONCE (url↔rid is 1:1 — rid is md5(url))
-    cand = (
-        links.select(rid.alias("resource_id"), F.col(link_col).alias("url"))
-        .groupBy("resource_id")
-        .agg(F.min("url").alias("url"))
-        .select(
-            F.lit(None).cast("string").alias("dataset_id"),
-            F.col("resource_id"),
-            F.col("url"),
-            F.lit(False).alias("deleted"),
-            F.lit(None).cast("long").alias("last_check"),
-            F.lit(False).alias("priority"),
-            F.lit(None).cast("string").alias("status"),
-            F.lit(None).cast("timestamp").alias("status_since"),
-            F.lit(None).cast("timestamp").alias("harvest_modified_at"),
+    cand = as_frontier_rows(
+        links.select(
+            resource_id_of(link_col).alias("resource_id"),
+            F.col(link_col).alias("url"),
             F.lit("discovered").alias("type"),
-            F.lit(None).cast("string").alias("format"),
-            F.lit(None).cast("string").alias("title"),
-            host_bucket("url", cfg.frontier_buckets).alias("host_bucket"),
-        )
+        ),
+        cfg or DEFAULT,
     )
-    seen = frontier.select("resource_id").distinct()
-    out = cand.join(seen, "resource_id", "left_anti")
-    # the join key moves first — restore frontier column order
-    from hydra_spark.schemas import FRONTIER_SCHEMA
-
-    return out.select(*[f.name for f in FRONTIER_SCHEMA.fields])
+    seen = frontier.select(F.col("resource_id").alias("_seen_rid")).distinct()
+    return cand.join(seen, F.col("resource_id") == F.col("_seen_rid"), "left_anti")
 
 
 def _decode_entities(x):

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hydra_spark.config import DEFAULT, HydraConfig
-from hydra_spark.functions.urls import host_bucket
+from hydra_spark.functions.urls import host_bucket, resource_id_of
 
 BASE_TS = "2025-01-01 00:00:00"
 
@@ -256,14 +256,6 @@ def generate_frontier(
     md5(url) (the reference names parsed tables md5(url) too —
     data_formats/csv_like/to_db.py:41)."""
     h = F.md5(F.col("url"))
-    rid = F.concat_ws(
-        "-",
-        F.substring(h, 1, 8),
-        F.substring(h, 9, 4),
-        F.substring(h, 13, 4),
-        F.substring(h, 17, 4),
-        F.substring(h, 21, 12),
-    )
     # md5-derived index (first 15 hex nibbles → 60-bit int) rather than
     # xxhash64: same determinism, but reproducible in any md5-capable
     # engine — the DuckDB oracle for the crawl round replays deleted/
@@ -271,7 +263,7 @@ def generate_frontier(
     idx = F.conv(F.substring(F.md5(F.col("url")), 1, 15), 16, 10).cast("long")
     fr = pages.select(
         F.substring(F.md5(F.concat(F.lit("ds"), F.col("url"))), 1, 24).alias("dataset_id"),
-        rid.alias("resource_id"),
+        resource_id_of("url").alias("resource_id"),
         F.col("url"),
         (F.pmod(idx, F.lit(499)) == 0).alias("deleted"),
         F.lit(None).cast("long").alias("last_check"),

@@ -74,6 +74,16 @@ def host_bucket(url: Column | str, n_buckets: int) -> Column:
     return F.pmod(F.hash(url_domain(url)), F.lit(n_buckets)).cast("int")
 
 
+def resource_id_of(url: Column | str) -> Column:
+    """UUID-shaped md5 of the URL (8-4-4-4-12 hex): the frontier key of
+    seeded and discovered resources."""
+    h = F.md5(F.col(url) if isinstance(url, str) else url)
+    return F.concat_ws(
+        "-",
+        *[F.substring(h, pos, n) for pos, n in ((1, 8), (9, 4), (13, 4), (17, 4), (21, 12))],
+    )
+
+
 def surt_key(url: Column | str) -> Column:
     """SURT-style url key (Sort-friendly URI Reordering Transform) —
     the canonical key of Common-Crawl/Wayback CDX indexes:

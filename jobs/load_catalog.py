@@ -6,9 +6,11 @@
 Reference cli/catalog.py:20-113: download catalog CSV → mark-deleted
 sweep → per-row UPSERT (skip archived) → stuck-status cleanup. Here the
 whole load is ONE Spark job: read CSV → MERGE into the frontier (one
-full-outer join on resource_id) → missing rows marked deleted → stuck
-claims reset. Re-running with a newer export is the incremental
-catalog refresh.
+full-outer join on resource_id) → missing rows marked deleted → the
+seen shards learn the new URLs. The first load merges into an empty
+frontier; re-running with a newer export is the incremental catalog
+refresh. `--keep-missing` leaves unlisted rows as they are (re-listed
+ones are still undeleted).
 
 Emits one JSON summary line on stdout.
 """
@@ -38,23 +40,18 @@ def main(argv: list[str] | None = None) -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from hydra_spark.catalog import as_frontier_rows, read_catalog_csv, upsert_catalog
-    from hydra_spark.crawl.loop import init_state
+    from hydra_spark.catalog import read_catalog_csv, upsert_catalog
     from hydra_spark.storage import StateStore
 
     store = StateStore(args.store)
-    incoming = read_catalog_csv(spark, args.catalog)
-    if not store.frontier.exists():  # first load seeds the frontier
-        init_state(store, as_frontier_rows(incoming))
-        stats = {"initialized": True}
-    else:
-        stats = upsert_catalog(
-            spark, store, incoming, mark_missing_deleted=not args.keep_missing
-        )
+    stats = upsert_catalog(
+        spark, store, read_catalog_csv(spark, args.catalog),
+        mark_missing_deleted=not args.keep_missing,
+    )
     frontier = store.frontier.read(spark)
     print(json.dumps({
         "summary": True,
-        **{k: v for k, v in (stats or {}).items()},
+        **stats,
         "frontier_rows": frontier.count(),
         "deleted_rows": frontier.where("deleted").count(),
     }))

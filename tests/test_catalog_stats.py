@@ -57,6 +57,15 @@ def test_upsert_insert_update_delete(spark, tmp_path):
     # seen shards were created and cover all live urls
     assert store.seen.exists()
 
+    # --keep-missing re-lists r2: undeleted, title AND type refreshed
+    upsert_catalog(spark, store, _cat(spark, [
+        ("d1", "r2", "http://a.com/2", "feed", "csv", None, "two-v2"),
+    ]), mark_missing_deleted=False)
+    fr2 = {r["resource_id"]: r for r in store.frontier.read(spark).collect()}
+    assert not fr2["r2"]["deleted"]
+    assert fr2["r2"]["title"] == "two-v2" and fr2["r2"]["type"] == "feed"
+    assert fr2["r1"] == fr["r1"] and fr2["r3"] == fr["r3"]
+
 
 def test_upsert_seen_set_gates_reinserts(spark, tmp_path):
     store = StateStore(str(tmp_path))
@@ -187,6 +196,7 @@ def test_insert_resource_and_url(spark, tmp_path):
     assert res["action"] == "insert"
     fr = {r["resource_id"]: r for r in store.frontier.read(spark).collect()}
     assert fr["r1"]["title"] == "one" and not fr["r1"]["deleted"]
+    assert store.seen.exists()
 
     # second resource → plain insert, first row untouched
     res = insert_resource(spark, store, "r2", "http://a.com/2", dataset_id="d1")
@@ -227,3 +237,8 @@ def test_insert_resource_and_url(spark, tmp_path):
     assert row["type"] == "main" and row["format"] == "csv"
     # frontier row count is exactly the 3 distinct resources
     assert store.frontier.read(spark).count() == 3
+    # every URL the inserts admitted reached the seen shards
+    bloom = BloomSeenSet(n_shards=DEFAULT.bloom_shards, fpp=DEFAULT.bloom_fpp)
+    probe = spark.createDataFrame([(moved,), ("http://ext.org/file.csv",)], "url string")
+    seen = {r["url"]: r["seen"] for r in bloom.check(probe, store.seen.read(spark)).collect()}
+    assert seen == {moved: True, "http://ext.org/file.csv": True}
