@@ -25,8 +25,11 @@ batch-iterative Spark DataFrame rounds over snapshot-versioned tables:
   unigram-LM scoring, PII redaction, stratified sampling, token
   accounting, sequence packing), multimodal decode (stdlib
   PNG/GIF-anim/BMP/JPEG-incl-progressive/WAV) + features/resize/frames.
-- ``jobs/``                 — spark-submit entry points (crawl,
-  load-catalog, analyse-csv) shipped via ``scripts/package.py`` zips.
+- ``jobs/hydra.py``         — the one spark-submit entry point, with a
+  subcommand per job (crawl, load-catalog, analyse-csv, csv-sample,
+  download-resource, insert-resource-into-catalog,
+  insert-url-into-catalog); the package ships as a
+  ``scripts/package.py`` zip.
 
 Everything is DataFrame-first: no per-row Python in hot paths; pandas
 /Arrow UDFs only where built-in functions cannot express the semantics.

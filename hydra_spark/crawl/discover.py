@@ -13,11 +13,10 @@ Scale design:
   (regexp_extract_all + transform/filter lambdas) — zero Python, zero
   shuffle, fused into the fetch round's scan.
 - enqueue dedup is ONE left_anti join keyed on resource_id
-  (md5(canonical url)) — only the NEW links shuffle; the frontier side
-  is already bucketed by the store. At 10^10 the sharded Bloom seen-set
-  (hydra_spark.seen) prefilters candidates so the anti-join sees a
-  fraction of the raw links; the join stays as the exact verifier
-  (same pattern as ml.dedup.incremental_dedup).
+  (md5(canonical url)) against the frontier's distinct resource_ids.
+  It reads no seen shard, so the dedup is exact. Two exchanges: the
+  candidates' dedup on resource_id (which the join reuses) and the
+  frontier's key `distinct`.
 - per-page link caps bound the explode (a spam page with 10^6 hrefs
   must not dominate a task).
 """

@@ -106,7 +106,8 @@ def simulate_fetch(
     # utils/file.py:37-43); zip magic → xlsx (the only zip payload in
     # this corpus, like the reference's magic→xlsx detection); html
     # marker → text/html; a first line with ≥2 commas followed by more
-    # lines → text/csv; else text/plain
+    # lines → text/csv; else text/plain. `sniff_mime` is the python twin;
+    # change both together (tests/test_fetch_headers.py compares them)
     from hydra_spark.analysis.xls import XLS_MAGIC, XLS_MIME
     from hydra_spark.analysis.xlsx import XLSX_MIME
 
@@ -220,3 +221,31 @@ def simulate_fetch(
         .withColumn("method", method)
         .drop("warc_ts")
     )
+
+
+def sniff_mime(data: bytes) -> str:
+    """`simulate_fetch`'s mime for a body held in python (the CLI jobs'
+    `file -b --mime-type` stand-in): the same branches in the same order
+    over the same first 200 bytes, decoded as leniently as the JVM's
+    binary→string cast."""
+    from hydra_spark.analysis.xls import XLS_MAGIC, XLS_MIME
+    from hydra_spark.analysis.xlsx import XLSX_MIME
+
+    head = data[:200]
+    text = head.decode("utf-8", errors="replace")
+    for hit, mime in (
+        (head[:2] == b"\x1f\x8b", "application/gzip"),
+        (head[:4] == b"PK\x03\x04", XLSX_MIME),
+        (head[:8] == XLS_MAGIC, XLS_MIME),
+        (head[:8] == b"\x89PNG\r\n\x1a\n", "image/png"),
+        (head[:2] == b"\xff\xd8", "image/jpeg"),
+        (head[:4] == b"GIF8", "image/gif"),
+        (head[:4] == b"RIFF" and head[8:12] == b"WAVE", "audio/x-wav"),
+        (head[:4] == b"PAR1", "application/vnd.apache.parquet"),
+        (text.startswith("<html"), "text/html"),
+        (text.startswith("{") and '"FeatureCollection"' in text, "application/vnd.geo+json"),
+        ("\n" in text and text.split("\n", 1)[0].count(",") >= 2, "text/csv"),
+    ):
+        if hit:
+            return mime
+    return "text/plain"

@@ -15,8 +15,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hydra_spark.catalog import as_frontier_rows
 from hydra_spark.config import DEFAULT, HydraConfig
-from hydra_spark.functions.urls import host_bucket, resource_id_of
+from hydra_spark.functions.urls import resource_id_of
 
 BASE_TS = "2025-01-01 00:00:00"
 
@@ -254,34 +255,35 @@ def generate_frontier(
     """Seed frontier (hydra `catalog`) from the pages corpus: one
     resource per URL, deterministic UUID-shaped resource ids from
     md5(url) (the reference names parsed tables md5(url) too —
-    data_formats/csv_like/to_db.py:41)."""
+    data_formats/csv_like/to_db.py:41). `as_frontier_rows` builds the
+    rows, as it builds every new frontier row."""
     h = F.md5(F.col("url"))
     # md5-derived index (first 15 hex nibbles → 60-bit int) rather than
     # xxhash64: same determinism, but reproducible in any md5-capable
     # engine — the DuckDB oracle for the crawl round replays deleted/
     # priority/harvest flags from it
     idx = F.conv(F.substring(F.md5(F.col("url")), 1, 15), 16, 10).cast("long")
-    fr = pages.select(
-        F.substring(F.md5(F.concat(F.lit("ds"), F.col("url"))), 1, 24).alias("dataset_id"),
-        resource_id_of("url").alias("resource_id"),
-        F.col("url"),
-        (F.pmod(idx, F.lit(499)) == 0).alias("deleted"),
-        F.lit(None).cast("long").alias("last_check"),
-        (F.pmod(idx, F.lit(97)) == 0).alias("priority"),
-        F.lit(None).cast("string").alias("status"),
-        F.lit(None).cast("timestamp").alias("status_since"),
-        F.when(F.pmod(idx, F.lit(5)) == 0, F.col("warc_ts") - F.expr("INTERVAL 10 DAYS"))
-        .otherwise(F.lit(None).cast("timestamp"))
-        .alias("harvest_modified_at"),
-        F.lit("main").alias("type"),
-        F.when(
-            F.substring(F.col("html").cast("string"), 1, 5) != "<html", F.lit("csv")
-        ).otherwise(F.lit(None).cast("string")).alias("format"),
-        F.concat(F.lit("resource "), F.substring(h, 1, 8)).alias("title"),
-    ).withColumn("host_bucket", host_bucket("url", cfg.frontier_buckets))
-    # frontier key is resource_id — md5(url) collisions are impossible in
-    # the synthetic corpus, but keep the invariant explicit:
-    return fr.dropDuplicates(["resource_id"])
+    return as_frontier_rows(
+        pages.select(
+            F.substring(F.md5(F.concat(F.lit("ds"), F.col("url"))), 1, 24).alias("dataset_id"),
+            resource_id_of("url").alias("resource_id"),
+            F.col("url"),
+            (F.pmod(idx, F.lit(499)) == 0).alias("deleted"),
+            # NULL, but set before the dedup rather than defaulted after
+            # it: a literal NULL there lets the optimizer prove no row was
+            # ever checked and drop the claim's latest-check join from
+            # plans built on this frontier (tests/test_plans.py checks it)
+            F.lit(None).cast("long").alias("last_check"),
+            (F.pmod(idx, F.lit(97)) == 0).alias("priority"),
+            F.when(F.pmod(idx, F.lit(5)) == 0, F.col("warc_ts") - F.expr("INTERVAL 10 DAYS"))
+            .alias("harvest_modified_at"),
+            F.lit("main").alias("type"),
+            F.when(F.substring(F.col("html").cast("string"), 1, 5) != "<html", F.lit("csv"))
+            .alias("format"),
+            F.concat(F.lit("resource "), F.substring(h, 1, 8)).alias("title"),
+        ),
+        cfg,
+    )
 
 
 def rich_html_page(idx: Column) -> tuple[Column, Column]:

@@ -276,7 +276,7 @@ class FrontierTable:
         return self.base.exists()
 
     def commit(self, df: DataFrame, round_id: int | None = None, meta: dict | None = None) -> int:
-        """Full-rewrite commit (catalog upsert / init): supersedes any
+        """Full-rewrite commit (catalog upsert / init / compact): supersedes any
         pending deltas — the caller's df was produced from read(), so
         delta effects (and pending inserts) are already folded in."""
         ins_ids = [b["id"] for b in self.inserts.manifest()["batches"]]
@@ -386,14 +386,7 @@ class FrontierTable:
         and the delta clear is harmless because re-applying an
         already-folded delta is idempotent (same last_check/status/
         priority values)."""
-        ins_ids = [b["id"] for b in self.inserts.manifest()["batches"]]
-        merged = self.read(spark)
-        self.base.commit(
-            merged,
-            round_id=round_id,
-            meta={"op": "compact", "folded_insert_batches": ins_ids},
-        )
-        self._clear_deltas()
+        self.commit(self.read(spark), round_id=round_id, meta={"op": "compact"})
 
     def prune_after_round(self, last_round: int) -> int:
         return (

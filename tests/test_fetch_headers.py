@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 from hydra_spark.config import DEFAULT
 from hydra_spark.crawl.change import has_check_changed_expr
-from hydra_spark.crawl.fetch import simulate_fetch
+from hydra_spark.crawl.fetch import simulate_fetch, sniff_mime
 
 NOW = "2025-01-15 00:00:00"
 
@@ -149,3 +149,47 @@ def test_waf_host_head_falls_back_to_get(spark):
     # deterministic per-domain: same host always yields the same method
     rows2 = simulate_fetch(batch, pages, DEFAULT, 2, NOW).collect()
     assert {r["domain"] for r in rows2 if r["method"] == "get"} == waf
+
+
+def test_sniff_mime_matches_fetch_mime(spark):
+    """`sniff_mime` (the CLI jobs' sniffer) and `simulate_fetch`'s mime
+    column give the same mime for every payload: each magic, html (and
+    html after leading blanks, which is not html), geojson, csv, a
+    one-line body, a csv whose first newline lies past the 200-byte
+    window, an empty body and non-UTF-8 bytes."""
+    import gzip
+
+    from hydra_spark.analysis.xls import XLS_MAGIC
+
+    payloads = [
+        gzip.compress(b"a,b,c\n1,2,3", mtime=0),
+        b"PK\x03\x04" + b"\x00" * 40,
+        XLS_MAGIC + b"\x00" * 40,
+        b"\x89PNG\r\n\x1a\n" + b"\x00" * 40,
+        b"\xff\xd8\xff\xe0" + b"\x00" * 40,
+        b"GIF89a" + b"\x00" * 40,
+        b"RIFF\x24\x00\x00\x00WAVEfmt " + b"\x00" * 40,
+        b"PAR1" + b"\x00" * 40,
+        b"<html><body><p>x, y, z</p></body></html>\n",
+        b"  <html><body>indented</body></html>\n",
+        b'{"type": "FeatureCollection", "features": [{"a": 1, "b": 2}]}\n',
+        b"a,b,c\n1,2,3\n",
+        b"a,b,c",
+        b"a,b," + b"x" * 250 + b"\n1,2,3\n",
+        b"",
+        b"caf\xe9,na\xefve,\xff\n1,2,3\n",
+        b"\x80\x81\x82 plain",
+    ]
+    pages = spark.createDataFrame(
+        [(f"https://h.com/doc/{i}", p) for i, p in enumerate(payloads)],
+        "url string, html binary",
+    ).select("url", F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"), "html")
+    batch = spark.createDataFrame(
+        [(f"r{i}", f"https://h.com/doc/{i}", "h.com") for i in range(len(payloads))],
+        "resource_id string, url string, domain string",
+    )
+    jvm = {r["url"]: r["mime_type"] for r in
+           simulate_fetch(batch, pages, DEFAULT, 1, NOW).select("url", "mime_type").collect()}
+    py = {f"https://h.com/doc/{i}": sniff_mime(p) for i, p in enumerate(payloads)}
+    assert jvm == py
+    assert len(set(py.values())) == 12  # every branch is hit

@@ -52,7 +52,7 @@ def test_spark_submit_py_files_crawl(tmp_path):
             "--conf", "spark.sql.shuffle.partitions=4",
             "--conf", "spark.ui.enabled=false",
             "--py-files", str(zip_path),
-            str(ROOT / "jobs" / "crawl_job.py"),
+            str(ROOT / "jobs" / "hydra.py"), "crawl",
             "--pages", "600", "--hosts", "12",
             "--rounds", "2", "--batch-size", "200",
             "--store", str(store),
@@ -82,7 +82,7 @@ def _submit(tmp_path, zip_path, script, extra_args):
         ["spark-submit", "--master", "local[4]",
          "--conf", "spark.sql.shuffle.partitions=4",
          "--conf", "spark.ui.enabled=false",
-         "--py-files", str(zip_path), str(ROOT / "jobs" / script), *extra_args],
+         "--py-files", str(zip_path), str(ROOT / "jobs" / "hydra.py"), script, *extra_args],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=420,
     )
     assert res.returncode == 0, res.stderr[-3000:]
@@ -100,7 +100,7 @@ def test_spark_submit_load_catalog_and_analyse(tmp_path):
         "d1;r2;http://a.example.com/2.csv;main;csv;;two;False\n"
     )
     store = tmp_path / "store"
-    out = _submit(tmp_path, zip_path, "load_catalog.py",
+    out = _submit(tmp_path, zip_path, "load-catalog",
                   ["--catalog", str(catalog), "--store", str(store)])
     s = [l for l in out if l.get("summary")][0]
     assert s["frontier_rows"] == 2 and s["deleted_rows"] == 0
@@ -110,14 +110,14 @@ def test_spark_submit_load_catalog_and_analyse(tmp_path):
         "dataset.id;id;url;type;format;harvest.modified_at;title;dataset.archived\n"
         "d1;r1;http://a.example.com/1.csv;main;csv;;one-renamed;False\n"
     )
-    out = _submit(tmp_path, zip_path, "load_catalog.py",
+    out = _submit(tmp_path, zip_path, "load-catalog",
                   ["--catalog", str(catalog), "--store", str(store)])
     s = [l for l in out if l.get("summary")][0]
     assert s["frontier_rows"] == 2 and s["deleted_rows"] == 1
 
     csvf = tmp_path / "data.csv"
     csvf.write_text("code,count,label\n01,2,a\n02,3,b\n")
-    out = _submit(tmp_path, zip_path, "analyse_csv.py",
+    out = _submit(tmp_path, zip_path, "analyse-csv",
                   ["--input", str(csvf), "--store", str(store)])
     s = [l for l in out if l.get("summary")][0]
     assert s["rows_parsed"] == 2 and s["parsing_error"] is None
@@ -125,8 +125,8 @@ def test_spark_submit_load_catalog_and_analyse(tmp_path):
 
 
 def test_spark_submit_csv_sample_and_download_resource(tmp_path, spark):
-    """jobs/csv_sample.py (reference cli/db.py:15-101) and
-    jobs/download_resource.py (reference cli/crawl.py:40-74) over a
+    """`csv-sample` (reference cli/db.py:15-101) and
+    `download-resource` (reference cli/crawl.py:40-74) over a
     crawled store + its pages corpus parquet."""
     import csv as csvmod
 
@@ -138,12 +138,12 @@ def test_spark_submit_csv_sample_and_download_resource(tmp_path, spark):
     pages_pq = tmp_path / "pages.parquet"
     generate_pages(spark, 600, n_hosts=12).write.parquet(str(pages_pq))
     store = tmp_path / "store"
-    _submit(tmp_path, zip_path, "crawl_job.py",
+    _submit(tmp_path, zip_path, "crawl",
             ["--pages-parquet", str(pages_pq), "--rounds", "2",
              "--batch-size", "200", "--store", str(store)])
 
     out_dir = tmp_path / "data"
-    out = _submit(tmp_path, zip_path, "csv_sample.py",
+    out = _submit(tmp_path, zip_path, "csv-sample",
                   ["--store", str(store), "--size", "10", "--download",
                    "--pages-parquet", str(pages_pq), "--out-dir", str(out_dir)])
     s = [l for l in out if l.get("summary")][0]
@@ -160,7 +160,7 @@ def test_spark_submit_csv_sample_and_download_resource(tmp_path, spark):
     # download one sampled resource by id
     rid = rows[0]["resource_id"]
     dl_dir = tmp_path / "dl"
-    out = _submit(tmp_path, zip_path, "download_resource.py",
+    out = _submit(tmp_path, zip_path, "download-resource",
                   ["--resource-id", rid, "--store", str(store),
                    "--pages-parquet", str(pages_pq), "--output-dir", str(dl_dir)])
     s = [l for l in out if l.get("summary")][0]
@@ -174,7 +174,7 @@ def test_spark_submit_csv_sample_and_download_resource(tmp_path, spark):
     res = subprocess.run(
         ["spark-submit", "--master", "local[4]",
          "--conf", "spark.ui.enabled=false",
-         "--py-files", str(zip_path), str(ROOT / "jobs" / "download_resource.py"),
+         "--py-files", str(zip_path), str(ROOT / "jobs" / "hydra.py"), "download-resource",
          "--resource-id", "nope", "--store", str(store),
          "--pages-parquet", str(pages_pq)],
         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=420,
@@ -201,7 +201,7 @@ def test_spark_submit_discovery_crawl(tmp_path):
             "--conf", "spark.sql.shuffle.partitions=4",
             "--conf", "spark.ui.enabled=false",
             "--py-files", str(zip_path),
-            str(ROOT / "jobs" / "crawl_job.py"),
+            str(ROOT / "jobs" / "hydra.py"), "crawl",
             "--pages", "400", "--hosts", "10",
             "--rounds", "4", "--batch-size", "400",
             "--linked-corpus", "--discover-links", "--seed-every", "10",
@@ -222,14 +222,14 @@ def test_spark_submit_discovery_crawl(tmp_path):
 
 
 def test_spark_submit_insert_resource_and_url(tmp_path):
-    """jobs/insert_resource.py + jobs/insert_url.py (reference
+    """`insert-resource-into-catalog` + `insert-url-into-catalog` (reference
     cli/catalog.py:115-219): single-row catalog upserts via
     spark-submit against a shared store."""
     zip_path = tmp_path / "hydra_spark.zip"
     subprocess.run([sys.executable, str(ROOT / "scripts" / "package.py"), str(zip_path)],
                    check=True, capture_output=True)
     store = tmp_path / "store"
-    out = _submit(tmp_path, zip_path, "insert_resource.py",
+    out = _submit(tmp_path, zip_path, "insert-resource-into-catalog",
                   ["--store", str(store), "--resource-id", "r1",
                    "--url", "http://a.example.com/1.csv",
                    "--dataset-id", "d1", "--title", "one"])
@@ -237,13 +237,13 @@ def test_spark_submit_insert_resource_and_url(tmp_path):
     assert s["action"] == "insert" and s["resource_id"] == "r1"
 
     # same id again → update branch; url refreshed
-    out = _submit(tmp_path, zip_path, "insert_resource.py",
+    out = _submit(tmp_path, zip_path, "insert-resource-into-catalog",
                   ["--store", str(store), "--resource-id", "r1",
                    "--url", "http://a.example.com/1-v2.csv"])
     s = [l for l in out if l.get("summary")][0]
     assert s["action"] == "update"
 
-    out = _submit(tmp_path, zip_path, "insert_url.py",
+    out = _submit(tmp_path, zip_path, "insert-url-into-catalog",
                   ["--store", str(store), "--url", "http://ext.org/data.csv",
                    "--resource-id", "rext"])
     s = [l for l in out if l.get("summary")][0]
